@@ -42,6 +42,41 @@ MAX_BUCKET = 200
 #: Mask folding h60 into the 31-bit domain of the affine permutation family.
 H31_MASK = 0x7FFFFFFF
 
+#: Build parameters of the shared MinHash signature table (the ``mh_sigs``
+#: artifact): the same constant keys its cache slot and is what a
+#: ``sigs=`` consumer's permutation count and banding are checked against.
+MINHASH_SIG_PARAMS = {
+    "n_perm": N_PERM,
+    "n_bands": N_BANDS,
+    "rows_per_band": ROWS_PER_BAND,
+}
+
+
+def check_params(arg: str, frame, declared: dict, **requested) -> None:
+    """Refuse a precomputed ``arg=`` frame next to parameters it was not
+    built with: ``declared`` is the build-parameter constant of the
+    artifact the frame is; each requested value must equal it. A
+    requested key ``declared`` does not name is an input the precomputed
+    frame makes unused, so it must be None. Driver-side only — no Spark
+    action. Silently ignoring the mismatch would return plausible-looking
+    wrong rows (ADVICE r13/r14)."""
+    if frame is None:
+        return
+    bad = [
+        k
+        for k, v in requested.items()
+        if (v != declared[k] if k in declared else v is not None)
+    ]
+    if bad:
+        got = ", ".join(
+            f"{k}={requested[k] if k in declared else 'set'}" for k in bad
+        )
+        raise ValueError(
+            f"{arg}= is a precomputed frame built with {declared}; got {got} "
+            f"— drop the {arg}= argument to honor them, or rebuild it with "
+            "those parameters"
+        )
+
 
 def shingle_hashes(shingle_col: str = "shingles") -> Column:
     """One md5 per distinct shingle, folded to 31 bits: the shared input of
@@ -130,6 +165,51 @@ def minhash_signature(hash_col: str | Column = "hs", n_perm: int = N_PERM) -> Co
     return F.array(*mins)
 
 
+def masked_hashes(hash_col: str = "hs") -> Column:
+    """A cached :func:`doc_shingle_hashes` array folded into the 31-bit
+    permutation domain: distinct(mask(distinct(h60))) == distinct(mask(h60))
+    element for element, so this equals hashing the shingles with the
+    masked h60 directly."""
+    return F.array_distinct(
+        F.transform(hash_col, lambda x: x.bitwiseAND(F.lit(H31_MASK)))
+    )
+
+
+def doc_signatures(
+    docs: DataFrame | None,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n_perm: int = N_PERM,
+    sh: DataFrame | None = None,
+    sigs: DataFrame | None = None,
+) -> DataFrame:
+    """``(doc_id, sig)`` MinHash signatures — the one definition behind the
+    ``mh_sigs`` artifact, :func:`minhash_near_dup_pairs` and
+    :func:`lsh_band_histogram`: a passed ``sigs`` table as is, else the
+    masked fold over a cached ``sh`` shingle table, else shingled inline
+    from ``docs``."""
+    if sigs is not None:
+        return sigs.select("doc_id", "sig")
+    if sh is not None:
+        return sh.select(
+            "doc_id", minhash_signature(masked_hashes("hs"), n_perm=n_perm).alias("sig")
+        )
+    # filter on the cheap word-count precondition (equivalent to
+    # size(shingles) > 0): a size(shingles) predicate gets pushed below the
+    # projection and REBUILDS the whole shingle pipeline inside the Filter
+    return (
+        word_shingles(
+            spread(docs).where(F.size(F.split(F.col(text_col), " ")) >= 3),
+            text_col=text_col,
+        )
+        .withColumn("hs", shingle_hashes("shingles"))
+        .select(
+            F.col(id_col).alias("doc_id"),
+            minhash_signature("hs", n_perm=n_perm).alias("sig"),
+        )
+    )
+
+
 def lsh_band_keys(
     sig_col: str = "sig", n_bands: int = N_BANDS, rows_per_band: int = ROWS_PER_BAND
 ) -> Column:
@@ -171,42 +251,17 @@ def minhash_near_dup_pairs(
     built exactly as the ``sh`` path builds it) to skip the shingle+fold
     pass entirely; it must cover exactly the documents of ``docs``.
     """
+    check_params(
+        "sigs", sigs, MINHASH_SIG_PARAMS,
+        n_perm=n_perm, n_bands=n_bands, rows_per_band=rows_per_band,
+    )
     # Persist the signatures: the plan reads them three times (two band-join
     # sides + verification join-back); without materialization Spark would
     # re-run the md5 shingle hashing for each read. One row per doc — at
     # scale this is the "signature table" a real pipeline would materialize.
-    # filter on the cheap word-count precondition (equivalent to
-    # size(shingles) > 0): a size(shingles) predicate gets pushed below the
-    # projection and REBUILDS the whole shingle pipeline inside the Filter
-    _build_sigs = sigs is None  # a passed-in table is already materialized
-    if sigs is not None:
-        sigs = sigs.select("doc_id", "sig")
-    elif sh is not None:
-        # Cached doc_shingle_hashes frame: mask the 60-bit hashes to the
-        # 31-bit permutation domain (distinct-after-mask == hashing the
-        # shingle strings with the masked h60 directly).
-        sigs = sh.select(
-            "doc_id",
-            minhash_signature(
-                F.array_distinct(
-                    F.transform("hs", lambda x: x.bitwiseAND(F.lit(H31_MASK)))
-                ),
-                n_perm=n_perm,
-            ).alias("sig"),
-        )
-    else:
-        sigs = (
-            word_shingles(
-                spread(docs).where(F.size(F.split(F.col(text_col), " ")) >= 3),
-                text_col=text_col,
-            )
-            .withColumn("hs", shingle_hashes("shingles"))
-            .select(
-                F.col(id_col).alias("doc_id"),
-                minhash_signature("hs", n_perm=n_perm).alias("sig"),
-            )
-        )
-    sigs = persist_tracked(sigs) if _build_sigs else sigs
+    # A passed-in table is already materialized.
+    built = doc_signatures(docs, id_col, text_col, n_perm, sh=sh, sigs=sigs)
+    sigs = built if sigs is not None else persist_tracked(built)
     bands = sigs.select(
         "doc_id", F.explode(lsh_band_keys("sig", n_bands, rows_per_band)).alias("band")
     )
@@ -580,6 +635,11 @@ def simhash_near_dup_pairs(
 JACCARD_MIN_PCT = 50
 JACCARD_MAX_DF = 50
 
+#: Build parameters of the shared shingle pair-count table (the
+#: ``shingle_pairs`` artifact): its cache key and the guard of every
+#: ``pairs=`` consumer.
+PAIR_COUNT_PARAMS = {"n": 3, "max_df": JACCARD_MAX_DF}
+
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
@@ -613,7 +673,7 @@ def ngram_jaccard_pairs(
     the whole set-overlap family (Jaccard / containment / histogram /
     venn) filters the SAME pair table, so one shared build serves all.
     """
-    _check_pairs_params(pairs, n=n, max_df=max_df, sh=sh)
+    check_params("pairs", pairs, PAIR_COUNT_PARAMS, n=n, max_df=max_df, sh=sh)
     out = pairs if pairs is not None else _shingle_pair_counts(
         docs, id_col, text_col, n, max_df, sh=sh
     )
@@ -621,23 +681,6 @@ def ngram_jaccard_pairs(
         F.col("n_common") * 100
         >= F.lit(min_jaccard_pct) * (F.col("n_a") + F.col("n_b") - F.col("n_common"))
     ).select("doc_a", "doc_b", "n_common", "n_a", "n_b")
-
-
-def _check_pairs_params(pairs, n: int, max_df: int, sh) -> None:
-    """Guard (ADVICE r13): a precomputed ``pairs`` frame is built at the
-    family defaults (n=3, max_df=50); silently ignoring a caller's
-    different n/max_df/sh next to it would yield plausible-looking wrong
-    overlaps. Refuse the combination loudly instead."""
-    if pairs is None:
-        return
-    if n != 3 or max_df != 50 or sh is not None:
-        raise ValueError(
-            "pairs= is a precomputed _shingle_pair_counts frame built at the "
-            f"family defaults (n=3, max_df=50, sh=None); got n={n}, "
-            f"max_df={max_df}, sh={'set' if sh is not None else 'None'} — "
-            "drop the pairs= argument to honor them, or rebuild the pair "
-            "table with those parameters"
-        )
 
 
 def _shingle_pair_counts(
@@ -711,7 +754,7 @@ def ngram_containment_pairs(
     short-circuits the bucket + pair-count passes with a precomputed
     :func:`_shingle_pair_counts` frame (same n/max_df).
     """
-    _check_pairs_params(pairs, n=n, max_df=max_df, sh=sh)
+    check_params("pairs", pairs, PAIR_COUNT_PARAMS, n=n, max_df=max_df, sh=sh)
     out = pairs if pairs is not None else _shingle_pair_counts(
         docs, id_col, text_col, n, max_df, sh=sh
     )
@@ -777,13 +820,18 @@ def cross_corpus_near_dup(
     )
 
 
+#: Build parameters of the shared duplicated-window table (the
+#: ``dup_windows`` artifact): its cache key and the guard of every ``dup=``
+#: consumer.
+DUP_WINDOW_PARAMS = {"window": 8}
+
+
 def span_dup_stats(
     docs: DataFrame,
     n: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
     dup: DataFrame | None = None,
-    dup_window: int | None = None,
 ) -> DataFrame:
     """Exact-substring (span) duplication profile: for each document, how
     many of its n-token sliding windows occur elsewhere in the corpus.
@@ -814,17 +862,12 @@ def span_dup_stats(
     entirely: n_dup_windows is that frame's per-doc row count (same
     occurrence-≥2 rule, position-for-position) and n_windows is the
     narrow ``size(split) − n + 1`` projection — the _sh()/_dupwin()
-    shared-base-pass stance. Pass ``dup_window`` (the ``window`` the dup
-    frame was built with) alongside it: a mismatch against ``n`` yields a
+    shared-base-pass stance. The frame is built at
+    ``DUP_WINDOW_PARAMS``: an ``n`` other than its window would yield a
     plausible-looking wrong dup_ratio (it can even exceed 1.0), so the
     guard refuses it loudly (ADVICE r13).
     """
-    if dup is not None and dup_window is not None and dup_window != n:
-        raise ValueError(
-            f"span_dup_stats: dup= frame was built with window={dup_window} "
-            f"but n={n} was requested — the per-doc window counts would "
-            "disagree; rebuild dup_window_positions with window=n"
-        )
+    check_params("dup", dup, DUP_WINDOW_PARAMS, window=n)
     if dup is not None:
         base = (
             docs.select(
@@ -989,60 +1032,6 @@ def bloom_contamination(
     )
 
 
-def _prefix_pair_gen(pct: int):
-    """Vectorized i<j candidate enumeration for
-    :func:`prefix_filtered_jaccard` (r14, guide §4): each input row is one
-    complete sorted bucket ``ds`` = array<struct<doc_id, n_sh, rn>>; emit
-    every ordered pair inside it that survives the lossless length filter
-    ``pct·max(na,nb) <= 100·min(na,nb)``. Pure int64 NumPy — identical
-    candidate SET to the previous interpreted transform/filter fold
-    (pinned by test_prefix_filter_pair_gen_matches_jvm_fold); the output
-    feeds a pair-keyed agg, so row order is irrelevant."""
-
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        names = ["doc_a", "doc_b", "na", "nb", "pa", "pb"]
-        for batch in batches:
-            la = batch.column(0)
-            sizes = pc.list_value_length(la).to_numpy().astype(np.int64)
-            flat = pc.list_flatten(la)
-            doc = flat.field("doc_id").to_numpy().astype(np.int64)
-            nsh = flat.field("n_sh").to_numpy().astype(np.int64)
-            rn = flat.field("rn").to_numpy().astype(np.int64)
-            starts = np.concatenate(([0], np.cumsum(sizes)))[:-1]
-            cols = [[] for _ in names]
-            for k in np.unique(sizes):
-                if k < 2:
-                    continue
-                sel = np.nonzero(sizes == k)[0]
-                idx = starts[sel][:, None] + np.arange(k)[None, :]
-                iu, ju = np.triu_indices(int(k), 1)
-                na = nsh[idx][:, iu].ravel()
-                nb = nsh[idx][:, ju].ravel()
-                keep = pct * np.maximum(na, nb) <= 100 * np.minimum(na, nb)
-                vals = (
-                    doc[idx][:, iu].ravel()[keep],
-                    doc[idx][:, ju].ravel()[keep],
-                    na[keep],
-                    nb[keep],
-                    rn[idx][:, iu].ravel()[keep],
-                    rn[idx][:, ju].ravel()[keep],
-                )
-                for c, v in zip(cols, vals):
-                    c.append(v)
-            if not cols[0]:
-                continue
-            arrays = [
-                pa.array(np.concatenate(c), type=pa.int64()) for c in cols
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    return gen
-
-
 def prefix_filtered_jaccard(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -1108,15 +1097,12 @@ def prefix_filtered_jaccard(
         F.sort_array(F.collect_list(F.struct("doc_id", "n_sh", "rn"))).alias("ds")
     )
     # NOTE (r14, measured): a mapInArrow/NumPy rewrite of this pair-gen
-    # fold (VERDICT r13 #1) was built, pinned equal
-    # (test_prefix_filter_pair_gen_matches_jvm_fold) and REVERTED on
+    # fold (VERDICT r13 #1) was built, pinned equal and REVERTED on
     # numbers: isolated over persisted buckets the interpreted fold runs
     # 0.19-0.24 s vs 0.36-0.41 s for the Arrow pass — at sf0.1 the
     # enumerated pair volume (19k buckets, 431k pairs, max k=10) is
     # below the Python-boundary floor (32 task dispatches + two Arrow
     # serializations cost more than 431k interpreted lambda evals).
-    # _prefix_pair_gen stays importable for a corpus where the pair
-    # volume justifies it.
     pair_structs = F.explode(
         F.flatten(
             F.expr(
@@ -1267,30 +1253,11 @@ def lsh_band_histogram(
     precomputed ``(doc_id, sig)`` table as ``sigs`` (the materialized
     signature artifact, built exactly as the ``sh`` path builds it) to
     skip the fold."""
-    if sigs is not None:
-        sigs = sigs.select("doc_id", "sig")
-    elif sh is not None:
-        sigs = sh.select(
-            "doc_id",
-            minhash_signature(
-                F.array_distinct(
-                    F.transform("hs", lambda x: x.bitwiseAND(F.lit(H31_MASK)))
-                ),
-                n_perm=n_perm,
-            ).alias("sig"),
-        )
-    else:
-        sigs = (
-            word_shingles(
-                spread(docs).where(F.size(F.split(F.col(text_col), " ")) >= 3),
-                text_col=text_col,
-            )
-            .withColumn("hs", shingle_hashes("shingles"))
-            .select(
-                F.col(id_col).alias("doc_id"),
-                minhash_signature("hs", n_perm=n_perm).alias("sig"),
-            )
-        )
+    check_params(
+        "sigs", sigs, MINHASH_SIG_PARAMS,
+        n_perm=n_perm, n_bands=n_bands, rows_per_band=rows_per_band,
+    )
+    sigs = doc_signatures(docs, id_col, text_col, n_perm, sh=sh, sigs=sigs)
     bands = sigs.select(
         F.explode(lsh_band_keys("sig", n_bands, rows_per_band)).alias("band")
     )
@@ -1482,7 +1449,8 @@ def exactsubstr_trim(
     from tagtree_spark.session import persist_tracked, spread
 
     # dup= lets call sites share one duplicated-window pass (the
-    # queries_ext._dupwin() session cache) instead of re-scanning
+    # dup_windows artifact) instead of re-scanning
+    check_params("dup", dup, DUP_WINDOW_PARAMS, window=window)
     if dup is None:
         dup = persist_tracked(
             dup_window_positions(docs, window, text_col, id_col)

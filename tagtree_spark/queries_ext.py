@@ -14,61 +14,165 @@ bit-identical cross-engine.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tagtree_spark.functions.hashing import duck_h60, h60
 from tagtree_spark.io import load_table
+from tagtree_spark.onetime_cache import ARTIFACTS, artifact
 from tagtree_spark.operators.dedup import (
+    DUP_WINDOW_PARAMS,
+    MINHASH_SIG_PARAMS,
+    PAIR_COUNT_PARAMS,
+    _bucket_pairs,
+    _shingle_pair_counts,
+    doc_shingle_hashes,
+    doc_signatures,
+    dup_window_positions,
     exact_dedup,
+    masked_hashes,
     minhash_near_dup_pairs,
+    near_dup_clusters,
     ngram_jaccard_pairs,
+    simhash60,
     simhash_near_dup_pairs,
 )
-from tagtree_spark.operators.multimodal import extract_features, media_from_documents
-from tagtree_spark.operators.similarity import PLANE_MOD, PLANE_OFF, cosine_topk, lsh_bucket_topk
+from tagtree_spark.operators.multimodal import (
+    extract_features,
+    jpeg420_from_documents,
+    jpeg_color_from_documents,
+    jpeg_from_documents,
+    media_from_documents,
+    png_from_documents,
+)
+from tagtree_spark.operators.similarity import (
+    PLANE_MOD,
+    PLANE_OFF,
+    bucketed_embeddings,
+    cosine,
+    cosine_topk,
+    ivf_assignments,
+    lsh_bucket_topk,
+    materialize_ivf,
+    materialize_ivfpq,
+    pq_codes,
+)
 from tagtree_spark.operators.text import (
     LANG_LEXICONS,
+    _bpe_rounds,
     fingerprints,
     lang_id,
     lang_stats,
+    materialize_postings,
     quality_score,
 )
-from tagtree_spark.queries import TSDB_CTE, query
-from tagtree_spark.session import spread, tune
+from tagtree_spark.queries import TSDB_CTE, _model, query
+from tagtree_spark.session import spread
+from tagtree_spark.streaming.cep import sequence_match_stream
+from tagtree_spark.streaming.clusters import ClusterSink
+from tagtree_spark.streaming.drift import DistributionSink
+from tagtree_spark.streaming.postings import PostingsSink
+from tagtree_spark.streaming.rollup import RollupSink
+from tagtree_spark.tsdb import pagefmt as pf
+from tagtree_spark.tsdb.seriesfmt import SeriesStoreWriter
+from tagtree_spark.tsdb.store import load_model, materialize_model
+from tagtree_spark.tsdb.walfmt import (
+    WalStreamReader,
+    WalWriter,
+    read_wal_series,
+    register_wal_source,
+    serialize_series,
+)
 
 
 def _docs(spark, sf_dir):
-    tune(spark)
     return load_table(spark, sf_dir, "documents")
 
 
-# Verified MinHash near-dup pairs, computed once per (session, sf dir) and
-# persisted — q25 (pair listing), q45 (clusters), and q49 (survivors) all
-# consume the same pair set; without the cache each would re-run the whole
-# shingle→signature→band→verify pipeline. Session-lived by design, like
-# queries._MODEL_CACHE (the materialized-signature-table analogue); tiny
-# (one row per verified near-dup pair).
-_PAIRS_CACHE: dict = {}
+def _emb(spark, sf_dir):
+    return load_table(spark, sf_dir, "embeddings")
 
 
+# --------------------------------------------------------------------------
+# Shared one-time artifacts (onetime_cache.artifact): each is built once
+# per (session, sf dir, params), cross-session cached unless it is a
+# session-only value, and listed in one_time_builders() unless declared
+# one_time=False.
+# --------------------------------------------------------------------------
+
+
+# Distinct-shingle-hash table (doc_id, hs): the md5 base pass of the exact
+# set-overlap family (q32 Jaccard, q99 containment, q126 prefix filter)
+# and of the MinHash signatures (via a 31-bit mask). One persisted copy,
+# one row per doc — the materialized "shingle table" a real corpus
+# pipeline would keep next to the documents.
+@artifact("shingles", doc_shingle_hashes, params={"n": PAIR_COUNT_PARAMS["n"]})
+def _sh(spark, sf_dir, n):
+    return doc_shingle_hashes(_docs(spark, sf_dir), n=n)
+
+
+# Shingle PAIR-COUNT table (doc_a, doc_b, n_common, n_a, n_b) at the
+# family defaults: the inverted-index bucket build + pair-count aggregate
+# dominated EVERY exact set-overlap consumer (~1-2 s each at sf0.1), and
+# q32 Jaccard / q99 containment / q194 drop list / q269 J-histogram / q284
+# venn all filter the SAME integer pair table (r13 batch 6). All-integer
+# columns, so downstream filters stay engine-exact.
+@artifact(
+    "shingle_pairs", _sh, _shingle_pair_counts, doc_shingle_hashes,
+    params=PAIR_COUNT_PARAMS,
+)
+def _spc(spark, sf_dir, n, max_df):
+    return _shingle_pair_counts(
+        _docs(spark, sf_dir), n=n, max_df=max_df, sh=_sh(spark, sf_dir, n=n)
+    )
+
+
+# SimHash fingerprint table (doc_id, simhash): q28 and q189 both
+# band-bucket and popcount-verify from the SAME 60-bit TF-weighted fold,
+# which dominated each consumer (~1 s) (r13).
+@artifact("simhash_fp", simhash60)
+def _sfp(spark, sf_dir):
+    return simhash60(spread(_docs(spark, sf_dir)))
+
+
+# SimHash VERIFIED-CANDIDATE pairs (doc_a, doc_b, hamming) at the family's
+# fixed banding (4×15-bit bands, MAX_BUCKET cap), UNTHRESHOLDED
+# (max_hamming=60 keeps every band-colliding pair): q28 (≤3) and q189 (≤8)
+# run the identical band-bucket pair generation + popcount verification
+# and differ ONLY in the final integer threshold filter, which commutes
+# with caching (r14, VERDICT r13 #8).
+@artifact(
+    "simhash_cand_pairs", _sfp, simhash_near_dup_pairs, _bucket_pairs, simhash60,
+    one_time=False,
+)
+def _shpairs(spark, sf_dir):
+    return simhash_near_dup_pairs(
+        _docs(spark, sf_dir), max_hamming=60, fp=_sfp(spark, sf_dir)
+    )
+
+
+# MinHash SIGNATURE table (doc_id, sig) — VERDICT r13 #5: q25 (via the
+# mh_pairs build), q75 (cross-corpus union == the whole corpus) and q195
+# (band histogram) each re-ran the 12-permutation affine fold per query;
+# it is exactly the "signature table" a 100 TB pipeline materializes next
+# to the corpus. Built by doc_signatures' ``sh=`` path, so consumers
+# taking ``sigs=`` are bit-identical to the inline path (pinned by
+# test_minhash_sigs_precomputed_matches_inline); they check their
+# permutation count and banding against MINHASH_SIG_PARAMS.
+@artifact(
+    "mh_sigs", _sh, doc_signatures, params=MINHASH_SIG_PARAMS, one_time=False
+)
+def _msig(spark, sf_dir, n_perm, n_bands, rows_per_band):
+    return doc_signatures(None, n_perm=n_perm, sh=_sh(spark, sf_dir))
+
+
+# Verified MinHash near-dup pairs — q25 (pair listing), q45 (clusters),
+# and q49 (survivors) all consume the same pair set; without the cache
+# each would re-run the whole shingle→signature→band→verify pipeline.
+# Tiny (one row per verified near-dup pair).
+@artifact("mh_pairs", _msig, _sh, minhash_near_dup_pairs)
 def _mh_pairs(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_frame, source_version
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _PAIRS_CACHE.get(key)
-    if got is None:
-        got = cached_frame(
-            spark,
-            "mh_pairs",
-            sf_dir,
-            source_version(_mh_pairs, _msig, _sh, minhash_near_dup_pairs),
-            lambda: minhash_near_dup_pairs(
-                _docs(spark, sf_dir), sigs=_msig(spark, sf_dir)
-            ),
-        ).persist()
-        got.count()  # materialize before the tracked upstream persists are released
-        _PAIRS_CACHE[key] = got
-    return got
+    return minhash_near_dup_pairs(_docs(spark, sf_dir), sigs=_msig(spark, sf_dir))
 
 
 # Connected components of the verified pair graph, materialized as a
@@ -83,24 +187,18 @@ def _mh_pairs(spark, sf_dir):
 # session-pinned persist. _clusters() re-resolves the committed version
 # per call, so consumers always see the latest commit (q273 compacts the
 # table mid-session; a pinned frame would hold a GC-able version dir).
-_CC_STORE_DIRS: dict = {}
-
-
+# Session-only: a store queries mutate is never cross-session cached.
+@artifact("cc_clusters", _mh_pairs, kind="value")
 def _cc_store_dir(spark, sf_dir) -> str:
     import tempfile
 
-    from tagtree_spark.operators.dedup import near_dup_clusters
     from tagtree_spark.tsdb.store import versioned_overwrite
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    d = _CC_STORE_DIRS.get(key)
-    if d is None:
-        d = tempfile.mkdtemp(prefix="tagtree-ccstore-")
-        cc = near_dup_clusters(_mh_pairs(spark, sf_dir))
-        # laid out for the consumers: clustered by cluster_id (the
-        # survivor/size aggregates' key), few right-sized files
-        versioned_overwrite(cc.repartition(8, "cluster_id"), d)
-        _CC_STORE_DIRS[key] = d
+    d = tempfile.mkdtemp(prefix="tagtree-ccstore-")
+    cc = near_dup_clusters(_mh_pairs(spark, sf_dir))
+    # laid out for the consumers: clustered by cluster_id (the
+    # survivor/size aggregates' key), few right-sized files
+    versioned_overwrite(cc.repartition(8, "cluster_id"), d)
     return d
 
 
@@ -110,273 +208,35 @@ def _clusters(spark, sf_dir):
     return versioned_read(spark, _cc_store_dir(spark, sf_dir))
 
 
-# Shared per-(session, sf dir) distinct-shingle-hash table (doc_id, hs):
-# the md5 base pass of the exact set-overlap family (q32 Jaccard, q99
-# containment, q126 prefix filter) and of the MinHash signatures (via a
-# 31-bit mask). One persisted copy, one row per doc — the materialized
-# "shingle table" a real corpus pipeline would keep next to the documents.
-_SH_CACHE: dict = {}
-
-
-def _sh(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_frame, source_version
-    from tagtree_spark.operators.dedup import doc_shingle_hashes
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _SH_CACHE.get(key)
-    if got is None:
-        got = cached_frame(
-            spark,
-            "shingles",
-            sf_dir,
-            source_version(_sh, doc_shingle_hashes),
-            lambda: doc_shingle_hashes(_docs(spark, sf_dir)),
-        ).persist()
-        got.count()
-        _SH_CACHE[key] = got
-    return got
-
-
-# Shared per-(session, sf dir) shingle PAIR-COUNT table (doc_a, doc_b,
-# n_common, n_a, n_b) at the family defaults (n=3, max_df=50): the
-# inverted-index bucket build + pair-count aggregate dominated EVERY
-# exact set-overlap consumer (~1-2 s each at sf0.1), and q32 Jaccard /
-# q99 containment / q194 drop list / q269 J-histogram / q284 venn all
-# filter the SAME integer pair table — one persisted copy is the _sh()
-# stance (r13 batch 6). All-integer columns, so downstream filters stay
-# engine-exact.
-_SPC_CACHE: dict = {}
-
-
-def _spc(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_frame, source_version
-    from tagtree_spark.operators.dedup import (
-        _shingle_pair_counts,
-        doc_shingle_hashes,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _SPC_CACHE.get(key)
-    if got is None:
-        got = cached_frame(
-            spark,
-            "shingle_pairs",
-            sf_dir,
-            source_version(_spc, _shingle_pair_counts, doc_shingle_hashes),
-            lambda: _shingle_pair_counts(
-                _docs(spark, sf_dir), sh=_sh(spark, sf_dir)
-            ),
-        ).persist()
-        got.count()
-        _SPC_CACHE[key] = got
-    return got
-
-
-# Shared per-(session, sf dir) SimHash fingerprint table (doc_id,
-# simhash): q28 and q189 both band-bucket and popcount-verify from the
-# SAME 60-bit TF-weighted fold, which dominated each consumer (~1 s) —
-# one persisted copy is the _sh() stance (r13).
-_SFP_CACHE: dict = {}
-
-
-def _sfp(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_frame, source_version
-    from tagtree_spark.operators.dedup import simhash60
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _SFP_CACHE.get(key)
-    if got is None:
-        got = cached_frame(
-            spark,
-            "simhash_fp",
-            sf_dir,
-            source_version(_sfp, simhash60),
-            lambda: simhash60(spread(_docs(spark, sf_dir))),
-        ).persist()
-        got.count()
-        _SFP_CACHE[key] = got
-    return got
-
-
-# Shared per-(session, sf dir) SimHash VERIFIED-CANDIDATE pairs
-# (doc_a, doc_b, hamming) at the family's fixed banding (4×15-bit bands,
-# MAX_BUCKET cap), UNTHRESHOLDED (max_hamming=60 keeps every
-# band-colliding pair): q28 (≤3) and q189 (≤8) run the identical
-# band-bucket pair generation + popcount verification and differ ONLY in
-# the final integer threshold filter, which commutes with caching — one
-# persisted copy is the _sh() stance (r14, VERDICT r13 #8).
-_SHP_CACHE: dict = {}
-
-
-def _shpairs(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_frame, source_version
-    from tagtree_spark.operators.dedup import (
-        _bucket_pairs,
-        simhash60,
-        simhash_near_dup_pairs,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _SHP_CACHE.get(key)
-    if got is None:
-        got = cached_frame(
-            spark,
-            "simhash_cand_pairs",
-            sf_dir,
-            source_version(
-                _shpairs, _sfp, simhash_near_dup_pairs, _bucket_pairs, simhash60
-            ),
-            lambda: simhash_near_dup_pairs(
-                _docs(spark, sf_dir), max_hamming=60, fp=_sfp(spark, sf_dir)
-            ),
-        ).persist()
-        got.count()
-        _SHP_CACHE[key] = got
-    return got
-
-
-# Shared per-(session, sf dir) MinHash SIGNATURE table (doc_id, sig) —
-# VERDICT r13 #5: q25 (via the _mh_pairs builder), q75 (cross-corpus
-# union == the whole corpus) and q195 (band histogram) each re-ran the
-# 12-permutation affine fold per query; one persisted copy is the _sh()
-# stance, and it is exactly the "signature table" a 100 TB pipeline
-# materializes next to the corpus. Built from the cached shingle table
-# with the IDENTICAL mask+fold expression minhash_near_dup_pairs'
-# ``sh=`` path uses, so consumers taking ``sigs=`` are bit-identical to
-# the inline path (pinned by test_minhash_sigs_precomputed_matches_inline).
-_MSIG_CACHE: dict = {}
-
-
-def _msig(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_frame, source_version
-    from tagtree_spark.operators.dedup import H31_MASK, minhash_signature
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _MSIG_CACHE.get(key)
-    if got is None:
-        got = cached_frame(
-            spark,
-            "mh_sigs",
-            sf_dir,
-            source_version(_msig, _sh, minhash_signature),
-            lambda: _sh(spark, sf_dir).select(
-                "doc_id",
-                minhash_signature(
-                    F.array_distinct(
-                        F.transform(
-                            "hs", lambda x: x.bitwiseAND(F.lit(H31_MASK))
-                        )
-                    )
-                ).alias("sig"),
-            ),
-        ).persist()
-        got.count()
-        _MSIG_CACHE[key] = got
-    return got
-
-
-# Shared per-(session, sf dir) ENCODED media tables: the PNG fixture
-# feeds q253+q290+q292, the gray JPEG fixture q289+q290 and the color
-# JPEG fixture q291+q298 — the encode pass is ~40% of each consumer's
-# cost and the compressed payloads are tiny (~3 KB/doc), so one
-# persisted copy per family is the _sh() stance (review r10 extended it
-# to PNG).
-_JPEG_MEDIA_CACHE: dict = {}
-
-
+# ENCODED media tables: the PNG fixture feeds q253+q290+q292, the gray
+# JPEG fixture q289+q290 and the color JPEG fixture q291+q298 — the encode
+# pass is ~40% of each consumer's cost and the compressed payloads are
+# tiny (~3 KB/doc), so one persisted copy per family (review r10 extended
+# it to PNG).
+@artifact("png_media", png_from_documents)
 def _png_media(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_frame, source_version
-    from tagtree_spark.operators.multimodal import png_from_documents
-
-    key = (spark.sparkContext.applicationId, sf_dir, "png")
-    got = _JPEG_MEDIA_CACHE.get(key)
-    if got is None:
-        got = cached_frame(
-            spark,
-            "png_media",
-            sf_dir,
-            source_version(_png_media, png_from_documents),
-            lambda: png_from_documents(_docs(spark, sf_dir)),
-        ).persist()
-        got.count()
-        _JPEG_MEDIA_CACHE[key] = got
-    return got
+    return png_from_documents(_docs(spark, sf_dir))
 
 
+@artifact("jpeg_media", jpeg_from_documents)
 def _jpeg_media(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_frame, source_version
-    from tagtree_spark.operators.multimodal import jpeg_from_documents
-
-    key = (spark.sparkContext.applicationId, sf_dir, "gray")
-    got = _JPEG_MEDIA_CACHE.get(key)
-    if got is None:
-        got = cached_frame(
-            spark,
-            "jpeg_media",
-            sf_dir,
-            source_version(_jpeg_media, jpeg_from_documents),
-            lambda: jpeg_from_documents(_docs(spark, sf_dir)),
-        ).persist()
-        got.count()
-        _JPEG_MEDIA_CACHE[key] = got
-    return got
+    return jpeg_from_documents(_docs(spark, sf_dir))
 
 
+@artifact("jpeg_color_media", jpeg_color_from_documents)
 def _jpeg_color_media(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_frame, source_version
-    from tagtree_spark.operators.multimodal import jpeg_color_from_documents
-
-    key = (spark.sparkContext.applicationId, sf_dir, "color")
-    got = _JPEG_MEDIA_CACHE.get(key)
-    if got is None:
-        got = cached_frame(
-            spark,
-            "jpeg_color_media",
-            sf_dir,
-            source_version(_jpeg_color_media, jpeg_color_from_documents),
-            lambda: jpeg_color_from_documents(_docs(spark, sf_dir)),
-        ).persist()
-        got.count()
-        _JPEG_MEDIA_CACHE[key] = got
-    return got
+    return jpeg_color_from_documents(_docs(spark, sf_dir))
 
 
+@artifact("jpeg420_media", jpeg420_from_documents, one_time=False)
 def _jpeg420_media(spark, sf_dir):
     """r14: q297 was the one decode query still ENCODING its fixture
     per-run (q289/q290/q291/q298 all read the cached media tables) —
     same stance, the 4:2:0 fixture is a stored input, the measured
     operator is the decode."""
-    from tagtree_spark.onetime_cache import cached_frame, source_version
-    from tagtree_spark.operators.multimodal import jpeg420_from_documents
-
-    key = (spark.sparkContext.applicationId, sf_dir, "420")
-    got = _JPEG_MEDIA_CACHE.get(key)
-    if got is None:
-        got = cached_frame(
-            spark,
-            "jpeg420_media",
-            sf_dir,
-            source_version(_jpeg420_media, jpeg420_from_documents),
-            lambda: jpeg420_from_documents(
-                _docs(spark, sf_dir).where(F.col("doc_id") % 20 == 0)
-            ),
-        ).persist()
-        got.count()
-        _JPEG_MEDIA_CACHE[key] = got
-    return got
-
-
-def _emb(spark, sf_dir):
-    tune(spark)
-    return load_table(spark, sf_dir, "embeddings")
-
-
-# Shared per-(session, sf dir) hyperplane-bucketed embeddings
-# (vec_id, v, lbl, bucket): the whole LSH family (q33/q39/q148/q151/q162)
-# reads the same 4-plane buckets — one persisted copy, like _sh() for
-# shingles. The materialized bucket column a vector store keeps on disk.
-_WB_CACHE: dict = {}
-_WB_PLANES: dict = {}
+    return jpeg420_from_documents(
+        _docs(spark, sf_dir).where(F.col("doc_id") % 20 == 0)
+    )
 
 
 #: The plane count every STATIC LSH-family oracle SQL is generated with
@@ -387,12 +247,13 @@ _WB_PLANES: dict = {}
 _LSH_ORACLE_PLANES = 4
 
 
+@artifact("wb_planes", kind="value", one_time=False)
 def _wb_planes(spark, sf_dir) -> int:
     """Corpus-count-derived hyperplane count for the shared _wb fixture
     (VERDICT r11 #1): derives 4 at every in-repo sf (so the static
     4-plane oracles are unchanged) and grows with a scaled corpus —
     the 10x sweep's 20k vectors derive 8 planes, keeping buckets under
-    MAX_BUCKET instead of dropping them all. Cached per (session, sf).
+    MAX_BUCKET instead of dropping them all.
 
     Oracle-consistency guard (ADVICE r12 #1): for corpora under
     /root/testdata — the only dirs the driver runs oracle SQL against —
@@ -406,36 +267,31 @@ def _wb_planes(spark, sf_dir) -> int:
 
     from tagtree_spark.operators.similarity import derive_n_planes
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _WB_PLANES.get(key)
-    if got is None:
-        got = derive_n_planes(_emb(spark, sf_dir).count())
-        if got != _LSH_ORACLE_PLANES and _os.path.realpath(sf_dir).startswith(
-            "/root/testdata"
-        ):
-            raise AssertionError(
-                f"LSH oracle divergence: {sf_dir} derives {got} hyperplanes "
-                f"but the static oracles pin _bucket_sql({_LSH_ORACLE_PLANES}) "
-                "— regenerate the q33/q39/q148/q151/q162 oracles or widen "
-                "the derive_n_planes guard band"
-            )
-        _WB_PLANES[key] = got
+    got = derive_n_planes(_emb(spark, sf_dir).count())
+    if got != _LSH_ORACLE_PLANES and _os.path.realpath(sf_dir).startswith(
+        "/root/testdata"
+    ):
+        raise AssertionError(
+            f"LSH oracle divergence: {sf_dir} derives {got} hyperplanes "
+            f"but the static oracles pin _bucket_sql({_LSH_ORACLE_PLANES}) "
+            "— regenerate the q33/q39/q148/q151/q162 oracles or widen "
+            "the derive_n_planes guard band"
+        )
     return got
 
 
-def _wb(spark, sf_dir):
-    from tagtree_spark.operators.similarity import bucketed_embeddings
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _WB_CACHE.get(key)
-    if got is None:
-        got = bucketed_embeddings(
-            _emb(spark, sf_dir),
-            n_planes=_wb_planes(spark, sf_dir),
-            label_col="label",
-        ).persist()
-        got.count()
-        _WB_CACHE[key] = got
+# Hyperplane-bucketed embeddings (vec_id, v, lbl, bucket): the whole LSH
+# family (q33/q39/q148/q151/q162) reads the same buckets — the
+# materialized bucket column a vector store keeps on disk. A session
+# persist, at the corpus-derived plane count.
+@artifact(
+    "hyperplane_buckets", _wb_planes, kind="value", params={"n_planes": _wb_planes}
+)
+def _wb(spark, sf_dir, n_planes):
+    got = bucketed_embeddings(
+        _emb(spark, sf_dir), n_planes=n_planes, label_col="label"
+    ).persist()
+    got.count()
     return got
 
 
@@ -915,7 +771,6 @@ def q35_incremental_ingest(spark, sf_dir):
 
     from tagtree_spark.session import persist_tracked
 
-    tune(spark)
     # r13: persist the bootstrap table — the second merge reads it THREE
     # times (touch join, new-series anti-join, tsid watermark),
     # re-running the whole first-batch pipeline per read (sweep log:
@@ -969,8 +824,6 @@ def q38_rate(spark, sf_dir):
     are single IEEE ops, bit-identical cross-engine."""
     from pyspark.sql import Window
 
-    from tagtree_spark.queries import _model
-
     _, _, samples = _model(spark, sf_dir)
     v = F.col("value").cast("decimal(18,4)")
     w = Window.partitionBy("tsid").orderBy("ts", "value")
@@ -1021,7 +874,7 @@ ORDER BY returnflag, linestatus""",
 def q43_cube(spark, sf_dir):
     """Grouping-sets coverage beyond ROLLUP (q18): full CUBE over
     (returnflag, linestatus)."""
-    li = load_table(tune(spark), sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.cube("l_returnflag", "l_linestatus")
         .agg(
@@ -1052,7 +905,7 @@ def q44_percentiles(spark, sf_dir):
     (smallest value whose cumulative rank covers p) are identical in Spark
     (mode='DISC') and DuckDB quantile_disc — integer outputs, no
     interpolation ambiguity."""
-    li = load_table(tune(spark), sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     q = F.col("l_quantity").cast("bigint")
     return (
         li.groupBy("l_returnflag")
@@ -1083,7 +936,6 @@ def q36_tumbling_window(spark, sf_dir):
     aggregation shape, run in batch): per event_type per 1-day epoch-aligned
     window — F.window('1 day') ≡ date_trunc('day') in UTC. The reference has
     no event-time windowing at all (SURVEY.md §2.9)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 day").alias("w"), "event_type")
@@ -1130,7 +982,6 @@ def q37_session_window(spark, sf_dir):
     gap (F.session_window — a new event extends the session iff its ts is
     strictly inside last_ts + gap, i.e. a new session starts at
     ts >= prev + gap, mirrored by the oracle's gaps-and-islands form)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     sess = ev.groupBy(F.session_window("ts", "30 minutes"), "user_id").agg(
         F.count("*").alias("n_events")
@@ -1259,7 +1110,6 @@ def q46_asof_instant(spark, sf_dir):
     feature-store backfill needs."""
     import datetime as _dt
 
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.asof import asof_instant
 
     _, _, samples = _model(spark, sf_dir)
@@ -1300,7 +1150,6 @@ def q53_range_agg(spark, sf_dir):
     instead of the latest-sample argmax."""
     import datetime as _dt
 
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.asof import range_agg
 
     _, _, samples = _model(spark, sf_dir)
@@ -1456,7 +1305,6 @@ def q56_label_replace(spark, sf_dir):
     ``service`` = 'web_$1' where event_type matches the anchored capture
     regex; non-matching series keep the (absent = '') label. Narrow
     per-row regex, no shuffle."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.promql import label_replace
 
     series, _, _ = _model(spark, sf_dir)
@@ -1493,7 +1341,6 @@ def q57_vector_ratio(spark, sf_dir):
     sum(click) / sum(view) matched on user_bucket — both sides resolved
     through the full matcher algebra, decimal-exact sums, single final
     divisions."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.matchers import LabelMatcher, MatchOp
     from tagtree_spark.tsdb.promql import vector_ratio
 
@@ -1591,7 +1438,6 @@ def q55_correlated_subquery(spark, sf_dir):
     order(s). Exercises Catalyst's subquery decorrelation (rewrite to
     aggregate + join); the comparison is decimal-exact (max is
     order-independent), final cast to DOUBLE per the output convention."""
-    tune(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_q55")
     return spark.sql(
         """
@@ -1764,7 +1610,6 @@ def q61_topk_series(spark, sf_dir):
     """PromQL ``topk(3, sum_over_time(...)) by (event_type)``: per-series
     decimal-exact totals ranked within each label group — window is
     partitioned by the group label, never global."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.promql import topk_series
 
     series, _, samples = _model(spark, sf_dir)
@@ -1783,7 +1628,6 @@ FROM samples GROUP BY 1 ORDER BY vbucket""",
 def q62_count_values(spark, sf_dir):
     """PromQL ``count_values`` (integer-bucketed): sample and series
     counts per value bucket — one map-side-combined groupBy."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.promql import count_values
 
     _, _, samples = _model(spark, sf_dir)
@@ -1808,7 +1652,6 @@ def q63_multires_rollup(spark, sf_dir):
     RE-AGGREGATED FROM THE 6h ONE (count/sum/min/max compose; sum is
     decimal so the two-level regrouping is bit-identical to the oracle's
     direct daily aggregation)."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.rollup import coarsen_rollup, rollup_samples
 
     _, _, samples = _model(spark, sf_dir)
@@ -1892,7 +1735,6 @@ def q65_irate(spark, sf_dir):
     """PromQL irate: instantaneous rate from each series' last two samples
     — tsid-partitioned window, single IEEE subtraction/division (no
     accumulation, so cross-engine exact)."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.promql import irate
 
     _, _, samples = _model(spark, sf_dir)
@@ -1923,7 +1765,6 @@ def q66_pivot(spark, sf_dir):
     two-phase hash aggregate — an unvalued pivot would need an extra pass
     to discover columns). Decimal sums, one final double cast each."""
     from tagtree_spark.operators.aggregates import pivot_event_metrics
-    from tagtree_spark.queries import _model
 
     series, _, samples = _model(spark, sf_dir)
     sv = samples.join(series.select("tsid", "user_bucket", "event_type"), "tsid")
@@ -2003,7 +1844,6 @@ def q69_stddev_over_time(spark, sf_dir):
     """PromQL stddev_over_time: decimal-exact moments (order-independent),
     variance assembled in exact decimal arithmetic, ONE double division +
     ONE correctly-rounded sqrt at the end — bit-identical cross-engine."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.promql import stddev_over_time
 
     _, _, samples = _model(spark, sf_dir)
@@ -2041,7 +1881,6 @@ def q70_histogram_quantile(spark, sf_dir):
     """PromQL histogram_quantile (p90) per event_type over implicit
     100-wide value buckets: exact-integer cumulative ranks, one linear
     interpolation inside the hit bucket. Label-partitioned windows only."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.promql import histogram_quantile
 
     series, _, samples = _model(spark, sf_dir)
@@ -2070,7 +1909,6 @@ def q71_grouping_sets(spark, sf_dir):
     """§2.8 explicit GROUPING SETS (the general form cube/rollup compile
     to): per-type, per-bucket, and per-pair aggregates in ONE expand+agg
     pass — not three scans. Decimal sums, final double cast."""
-    from tagtree_spark.queries import _model
 
     series, _, samples = _model(spark, sf_dir)
     sv = samples.join(series.select("tsid", "event_type", "user_bucket"), "tsid")
@@ -2112,8 +1950,6 @@ def q72_moving_avg(spark, sf_dir):
     row — tsid-partitioned window, deterministic (ts, value) order."""
     from pyspark.sql import Window
 
-    from tagtree_spark.queries import _model
-
     _, _, samples = _model(spark, sf_dir)
     w = Window.partitionBy("tsid").orderBy("ts", "value")
     wf = w.rowsBetween(-3, 0)
@@ -2145,7 +1981,6 @@ FROM series ORDER BY tsid""",
 def q73_label_join(spark, sf_dir):
     """PromQL label_join: concatenate source labels into a new label —
     narrow per-row projection, no shuffle."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.promql import label_join
 
     series, _, _ = _model(spark, sf_dir)
@@ -2176,7 +2011,6 @@ def q74_group_share(spark, sf_dir):
     """PromQL group_left many-to-one matching: per-series total / its
     label group's total. Group totals roll up from the per-series decimal
     aggregates (one samples scan), broadcast-joined back."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.promql import group_share
 
     series, _, samples = _model(spark, sf_dir)
@@ -2483,7 +2317,6 @@ def q81_counter_stats(spark, sf_dir):
     positive delta sums in decimal (each delta fixed by the per-series ts
     order, so the sum is order-independent) and reset/change counts — one
     lag window + one groupBy."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.promql import counter_stats
 
     _, _, samples = _model(spark, sf_dir)
@@ -2539,7 +2372,6 @@ FROM g ORDER BY tsid""",
 def q83_deriv(spark, sf_dir):
     """PromQL deriv: per-series least-squares slope — centered integer x,
     decimal moment sums (order-independent), one final double division."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.promql import deriv
 
     _, _, samples = _model(spark, sf_dir)
@@ -2569,19 +2401,11 @@ def q84_minhash_calibration(spark, sf_dir):
     banding scheme matches the corpus. Exact side = array_intersect over
     the per-doc distinct shingle-hash arrays (integer counts, single
     final divisions)."""
-    from tagtree_spark.operators.dedup import H31_MASK
-
     # the exact side's 31-bit shingle sets are the cached _sh table under
-    # the permutation-domain mask: distinct(mask(distinct(h60))) ==
-    # distinct(mask(h60)) element-for-element, so this is bit-identical
-    # to re-shingling (and only sizes/intersections are consumed) —
-    # kills the per-rep word_shingles+md5 re-run (~1.1 s, VERDICT r13 #5)
-    hs = _sh(spark, sf_dir).select(
-        "doc_id",
-        F.array_distinct(
-            F.transform("hs", lambda x: x.bitwiseAND(F.lit(H31_MASK)))
-        ).alias("hs"),
-    )
+    # the permutation-domain mask — bit-identical to re-shingling (and
+    # only sizes/intersections are consumed); kills the per-rep
+    # word_shingles+md5 re-run (~1.1 s, VERDICT r13 #5)
+    hs = _sh(spark, sf_dir).select("doc_id", masked_hashes("hs").alias("hs"))
     pairs = _mh_pairs(spark, sf_dir)
     ha = hs.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("ha"))
     hb = hs.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hb"))
@@ -2670,7 +2494,6 @@ def q86_predict_linear(spark, sf_dir):
     """PromQL predict_linear: least-squares extrapolation 1h past each
     series' last sample — exact decimal moments, then a fixed chain of
     IEEE ops written identically in both engines."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.promql import predict_linear
 
     _, _, samples = _model(spark, sf_dir)
@@ -2700,7 +2523,6 @@ def q87_quantile_over_time(spark, sf_dir):
     """PromQL quantile_over_time (discrete): per-series p50/p90/p99 picked
     at rank floor(q*(n-1))+1 — a pick, not arithmetic, so the doubles are
     cross-engine exact."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.promql import quantile_over_time
 
     _, _, samples = _model(spark, sf_dir)
@@ -2731,7 +2553,6 @@ FROM d GROUP BY tsid ORDER BY tsid""",
 def q88_gauge_delta(spark, sf_dir):
     """PromQL delta + idelta for gauges: last-minus-first and last-minus-
     previous per series — single IEEE subtractions on raw sample values."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.promql import gauge_delta
 
     _, _, samples = _model(spark, sf_dir)
@@ -2779,7 +2600,6 @@ def q89_holt_winters(spark, sf_dir):
     oracle's step-per-rank recursive CTE, identical IEEE op order per
     step, bit-identical doubles. Smoothing constants 0.5/0.25 are exactly
     representable so 1−α is too."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.promql import holt_winters
 
     _, _, samples = _model(spark, sf_dir)
@@ -2803,7 +2623,6 @@ def q90_salted_agg(spark, sf_dir):
     form)."""
     from tagtree_spark.operators.skew import salted_agg
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     out = salted_agg(
         ev,
@@ -2875,7 +2694,7 @@ def q92_span_dedup(spark, sf_dir):
     from tagtree_spark.operators.dedup import span_dup_stats
 
     return span_dup_stats(
-        _docs(spark, sf_dir), n=8, dup=_dupwin(spark, sf_dir), dup_window=8
+        _docs(spark, sf_dir), n=8, dup=_dupwin(spark, sf_dir)
     ).orderBy("doc_id")
 
 
@@ -2918,7 +2737,6 @@ def q94_clamp_sgn(spark, sf_dir):
     """PromQL clamp(v, 5, 100) + sgn summarized per series: counts clipped
     by each bound and post-clamp min/max — least/greatest PICK raw doubles
     (no arithmetic), cross-engine exact."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.promql import clamp_stats
 
     _, _, samples = _model(spark, sf_dir)
@@ -2959,7 +2777,6 @@ def q95_bottomk_absent(spark, sf_dir):
     """PromQL bottomk(2) by event_type + absent() over a probe list of
     metric names, unioned into one alerting-shaped result: the 2 weakest
     series per present metric, and absent=1 rows for names with no series."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.promql import absent_names, bottomk_series
 
     series, _, samples = _model(spark, sf_dir)
@@ -3011,7 +2828,6 @@ def q96_qot_windowed(spark, sf_dir):
     materialize an unbounded sort window."""
     import datetime as _dt
 
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.promql import quantile_over_time
 
     _, _, samples = _model(spark, sf_dir)
@@ -3054,7 +2870,6 @@ def q97_hw_windowed(spark, sf_dir):
     lifetime."""
     import datetime as _dt
 
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.promql import holt_winters
 
     _, _, samples = _model(spark, sf_dir)
@@ -3139,29 +2954,16 @@ def q99_containment(spark, sf_dir):
     ).orderBy("doc_a", "doc_b")
 
 
-# Materialized-store cache: one persisted z-ordered store per
-# (session, sf_dir), under the system tmp dir — the q100 path exercises
-# the PERSISTED layout (partition-pruned postings, z-ordered samples),
-# session-lived like queries._MODEL_CACHE.
-_STORE_CACHE: dict = {}
+# Materialized store: one persisted z-ordered store per sf_dir — the
+# q100 path exercises the PERSISTED layout (partition-pruned postings,
+# z-ordered samples). Every call re-opens it with load_model.
+@artifact("store_model", materialize_model, kind="dir")
+def _store_dir(spark, sf_dir, d):
+    materialize_model(spark, load_table(spark, sf_dir, "events"), d)
 
 
 def _store_model(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_dir, source_version
-    from tagtree_spark.tsdb.store import load_model, materialize_model
-
-    tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _STORE_CACHE:
-        _STORE_CACHE[key] = cached_dir(
-            "store_model",
-            sf_dir,
-            source_version(_store_model, materialize_model),
-            lambda d: materialize_model(
-                spark, load_table(spark, sf_dir, "events"), d
-            ),
-        )
-    return load_model(spark, _STORE_CACHE[key])
+    return load_model(spark, _store_dir(spark, sf_dir))
 
 
 from tagtree_spark.queries import ORACLE as _ORACLE_REG  # noqa: E402
@@ -3205,7 +3007,6 @@ def q101_hll_distinct(spark, sf_dir):
     in the result."""
     from tagtree_spark.operators.sketch import hll_distinct
 
-    tune(spark)
     return hll_distinct(load_table(spark, sf_dir, "lineitem"), "l_orderkey")
 
 
@@ -3227,7 +3028,6 @@ def q102_hll_by_group(spark, sf_dir):
         hll_registers,
     )
 
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     regs = hll_registers(orders, "o_custkey", ["o_orderpriority"])
     est = hll_estimate_from_registers(regs, ["o_orderpriority"])
@@ -3442,7 +3242,6 @@ def _duck_bloom_sql() -> str:
     """DuckDB oracle for q110: identical Bloom filter — one md5-h60 per
     gram (materialized into an integer list first), k Kirsch–Mitzenmacher
     positions derived arithmetically inside the probe lambda."""
-    from tagtree_spark.functions.hashing import duck_h60
     from tagtree_spark.operators.dedup import (
         _BLOOM_SHIFT,
         BLOOM_K,
@@ -3553,7 +3352,6 @@ def q112_instant_offset(spark, sf_dir):
     primitive. Same broadcast eval grid + single-pass argmax."""
     import datetime as _dt
 
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.asof import instant_offset
 
     _, _, samples = _model(spark, sf_dir)
@@ -3581,27 +3379,11 @@ def q113_store_get_labels(spark, sf_dir):
     )
 
 
-# Session-cached persisted IVF store per (session, sf_dir) — like the
-# q100/q103-q105 _store_model cache, for the vector-store disk path.
-_IVF_CACHE: dict = {}
-
-
-def _ivf_store(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_dir, source_version
-    from tagtree_spark.operators.similarity import materialize_ivf
-
-    tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVF_CACHE:
-        _IVF_CACHE[key] = cached_dir(
-            "ivf_store",
-            sf_dir,
-            source_version(_ivf_store, materialize_ivf),
-            lambda d: materialize_ivf(
-                load_table(spark, sf_dir, "embeddings"), d, n_cells=8
-            ),
-        )
-    return _IVF_CACHE[key]
+# Persisted IVF store — like the q100/q103-q105 _store_model store, for
+# the vector-store disk path.
+@artifact("ivf_store", materialize_ivf, kind="dir", params={"n_cells": 8})
+def _ivf_store(spark, sf_dir, d, n_cells):
+    materialize_ivf(load_table(spark, sf_dir, "embeddings"), d, n_cells=n_cells)
 
 
 @query("q114_ivf_store_topk", _ORACLE_REG["q42_ivf_ann"])
@@ -3637,7 +3419,6 @@ def q115_changes(spark, sf_dir):
     comparisons on raw doubles — no arithmetic — so cross-engine exact."""
     import datetime as _dt
 
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.promql import changes_over_time
 
     _, _, samples = _model(spark, sf_dir)
@@ -3680,7 +3461,6 @@ def q116_mad(spark, sf_dir):
     each deviation is one IEEE subtract + abs — cross-engine exact."""
     import datetime as _dt
 
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.promql import mad_over_time
 
     _, _, samples = _model(spark, sf_dir)
@@ -3827,45 +3607,31 @@ def _bpe_oracle_sql(n_merges: int) -> str:
     )
 
 
-# Trained BPE rounds per (session, sf dir) — q119 (merge listing) and q125
-# (corpus encoding) share one training run; the final symbol frame is tiny
-# (vocab × symbols) and persisted like _mh_pairs/_MODEL_CACHE.
-_BPE_CACHE: dict = {}
+# Trained BPE rounds — q119 (merge listing) and q125 (corpus encoding)
+# share one training run; the final symbol frame is tiny (vocab ×
+# symbols) and persisted like mh_pairs.
+def _open_bpe(spark, d):
+    merges = [
+        (int(r.step), r.lsym, r.rsym, int(r.cnt))
+        for r in spark.read.parquet(f"{d}/merges").orderBy("step").collect()
+    ]
+    syms = spark.read.parquet(f"{d}/syms").persist()
+    syms.count()
+    return merges, syms
 
 
-def _bpe(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_dir, source_version
-    from tagtree_spark.operators.text import _bpe_rounds
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _BPE_CACHE.get(key)
-    if got is None:
-
-        def _build(d):
-            # batch_k=4: provably identical merges to sequential (see
-            # bpe_train's safe-prefix contract + test), in ~half the rounds
-            merges, syms = _bpe_rounds(_docs(spark, sf_dir), 4, "text", batch_k=4)
-            spark.createDataFrame(
-                merges, "step bigint, lsym string, rsym string, cnt bigint"
-            ).coalesce(1).write.parquet(f"{d}/merges")
-            syms.write.parquet(f"{d}/syms")
-
-        d = cached_dir(
-            "bpe",
-            sf_dir,
-            source_version(_bpe, _bpe_rounds),
-            _build,
-            params="k=4,batch_k=4",
-        )
-        merges = [
-            (int(r.step), r.lsym, r.rsym, int(r.cnt))
-            for r in spark.read.parquet(f"{d}/merges").orderBy("step").collect()
-        ]
-        syms = spark.read.parquet(f"{d}/syms").persist()
-        syms.count()
-        got = (merges, syms)
-        _BPE_CACHE[key] = got
-    return got
+# batch_k=4: provably identical merges to sequential (see bpe_train's
+# safe-prefix contract + test), in ~half the rounds
+@artifact(
+    "bpe_train", _bpe_rounds, kind="dir", load=_open_bpe,
+    params={"k": 4, "batch_k": 4},
+)
+def _bpe(spark, sf_dir, d, k, batch_k):
+    merges, syms = _bpe_rounds(_docs(spark, sf_dir), k, "text", batch_k=batch_k)
+    spark.createDataFrame(
+        merges, "step bigint, lsym string, rsym string, cnt bigint"
+    ).coalesce(1).write.parquet(f"{d}/merges")
+    syms.write.parquet(f"{d}/syms")
 
 
 @query("q119_bpe_train", _bpe_oracle_sql(4))
@@ -3950,7 +3716,6 @@ def q121_funnel(spark, sf_dir):
 
     from tagtree_spark.operators.events import funnel
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return funnel(ev, ["view", "click", "purchase"], _dt.timedelta(days=7))
 
@@ -3985,7 +3750,6 @@ def q122_retention(spark, sf_dir):
     join, exact counts."""
     from tagtree_spark.operators.events import retention_cohorts
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return retention_cohorts(ev, max_weeks=4).orderBy("cohort_day", "week_offset")
 
@@ -4031,7 +3795,6 @@ def q123_kmv_distinct(spark, sf_dir):
     + one IEEE division, true count rides along (error visible)."""
     from tagtree_spark.operators.sketch import kmv_estimates, kmv_registers, kmv_union
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     regs = kmv_registers(ev, "user_id", "event_type")
     allr = regs.unionByName(kmv_union(regs))
@@ -4074,7 +3837,6 @@ def q124_interval_join(spark, sf_dir):
     plan state-bounded when both sides stream."""
     from tagtree_spark.streaming.joins import interval_join_streams
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").select("user_id", "ts")
     errors = ev.where(F.col("event_type") == "error").select("user_id", "ts")
@@ -4356,7 +4118,6 @@ def q130_gapfill(spark, sf_dir):
     time_bucket_gapfill + interpolate) — one union + two frame windows
     per series, no grid-to-samples join; epoch-microsecond integer time
     math and a three-IEEE-op interpolation, bit-exact cross-engine."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.rollup import interpolate_grid
 
     _, _, samples = _model(spark, sf_dir)
@@ -4534,7 +4295,7 @@ def q135_sampled_quantiles(spark, sf_dir):
     row."""
     from tagtree_spark.operators.aggregates import sampled_quantiles
 
-    li = load_table(tune(spark), sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return sampled_quantiles(
         li,
         "concat_ws('#', CAST(l_orderkey AS STRING), CAST(l_linenumber AS STRING))",
@@ -4569,7 +4330,7 @@ def q136_fuzzy_linkage(spark, sf_dir):
     per block, one shuffle, never all-pairs."""
     from tagtree_spark.operators.linkage import blocked_fuzzy_pairs
 
-    cu = load_table(tune(spark), sf_dir, "customer")
+    cu = load_table(spark, sf_dir, "customer")
     return blocked_fuzzy_pairs(
         cu,
         "c_custkey",
@@ -4629,7 +4390,7 @@ def q138_returned_items(spark, sf_dir):
     orders ⋈ returnflag-filtered lineitem ⋈ customer ⋈ broadcast nation,
     decimal revenue, top-20 loss accounts. Both filters reach the scans;
     nation broadcasts; TakeOrdered caps the result."""
-    cust = load_table(tune(spark), sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-07-01").cast("timestamp"))
@@ -5145,7 +4906,6 @@ def q147_expectations(spark, sf_dir):
 
 
 def _q148_oracle() -> str:
-    from tagtree_spark.functions.hashing import duck_h60
     from tagtree_spark.operators.similarity import ANN_AUDIT_SALT
 
     bucket = _bucket_sql(4)
@@ -5615,25 +5375,11 @@ def q159_fd_check(spark, sf_dir):
 # r5 batch: persisted positional postings + classifier eval
 # --------------------------------------------------------------------------
 
-# Session-cached persisted positional-postings store per (session, sf_dir),
-# like _IVF_CACHE for the vector store.
-_POSTINGS_CACHE: dict = {}
-
-
-def _postings_store(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_dir, source_version
-    from tagtree_spark.operators.text import materialize_postings
-
-    tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _POSTINGS_CACHE:
-        _POSTINGS_CACHE[key] = cached_dir(
-            "postings_store",
-            sf_dir,
-            source_version(_postings_store, materialize_postings),
-            lambda d: materialize_postings(_docs(spark, sf_dir), d),
-        )
-    return _POSTINGS_CACHE[key]
+# Persisted positional-postings store, like ivf_store for the vector
+# store.
+@artifact("postings_store", materialize_postings, kind="dir")
+def _postings_store(spark, sf_dir, d):
+    materialize_postings(_docs(spark, sf_dir), d)
 
 
 @query("q160_store_phrase_search", _ORACLE_REG["q156_phrase_search"])
@@ -5836,7 +5582,6 @@ def q166_dedup_then_sample(spark, sf_dir):
     the dedupe-before-sample ordering every corpus build needs (sampling
     first would re-admit duplicates), declared as ONE plan: hash agg →
     semi join → narrow filter."""
-    from tagtree_spark.operators.dedup import exact_dedup
     from tagtree_spark.operators.sampling import stratified_sample
 
     docs = _docs(spark, sf_dir)
@@ -6063,7 +5808,6 @@ def q171_rrf_fusion(spark, sf_dir):
     from pyspark.sql import Window
 
     from tagtree_spark.operators.retrieval import rrf_fuse
-    from tagtree_spark.operators.similarity import cosine
 
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.array_distinct(F.split("text", " ")).alias("w")
@@ -6278,7 +6022,6 @@ def q175_lagged_xcorr(spark, sf_dir):
     — "does A lead B?", the question PromQL's lag-0 binary ops can't
     ask. Six exact integer sums (DECIMAL(38,0) ≡ HUGEINT) per lag, one
     final IEEE chain; degenerate lags dropped on an exact predicate."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.rollup import lagged_xcorr
 
     series, _, samples = _model(spark, sf_dir)
@@ -6926,8 +6669,6 @@ def q188_tsdb_status(spark, sf_dir):
     before they kill the index."""
     from pyspark.sql import Window
 
-    from tagtree_spark.queries import _model
-
     _, postings, _ = _model(spark, sf_dir)
     pairs = postings.groupBy("name", "value").agg(
         F.count("*").cast("bigint").alias("n_series")
@@ -7144,7 +6885,6 @@ def q192_routed_rollup(spark, sf_dir):
     production both sides are pre-materialized ladder tables (q63 /
     RollupSink) and this plan reads two pruned partition ranges; decimal
     sums make the coarse side bit-identical to raw aggregation."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.rollup import routed_rollup_read
 
     _, _, samples = _model(spark, sf_dir)
@@ -7490,29 +7230,12 @@ _PQ_CODES_CTES = _PQ_BASE_CTES + """, code AS (
 )"""
 
 
-# Shared per-(session, sf dir) PQ codes frame (vec_id, m, code, qerr) —
-# q201 (ADC), q202 (rerank shortlist), and q204 (error telemetry) all read
-# the same stand-in encoding; one persisted copy, the _sh()/_wb() pattern.
-_PQC_CACHE: dict = {}
-
-
+# PQ codes frame (vec_id, m, code, qerr) — q201 (ADC), q202 (rerank
+# shortlist), and q204 (error telemetry) all read the same stand-in
+# encoding; one persisted copy, the _sh()/_wb() pattern.
+@artifact("pq_codes", pq_codes)
 def _pqc(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_frame, source_version
-    from tagtree_spark.operators.similarity import pq_codes
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _PQC_CACHE.get(key)
-    if got is None:
-        got = cached_frame(
-            spark,
-            "pq_codes",
-            sf_dir,
-            source_version(_pqc, pq_codes),
-            lambda: pq_codes(_emb(spark, sf_dir)),
-        ).persist()
-        got.count()
-        _PQC_CACHE[key] = got
-    return got
+    return pq_codes(_emb(spark, sf_dir))
 
 
 @query(
@@ -7671,25 +7394,10 @@ def q204_pq_qerr(spark, sf_dir):
     )
 
 
-# Session-cached persisted IVF+PQ store per (session, sf_dir), like
-# _IVF_CACHE for the uncompressed vector store.
-_IVFPQ_CACHE: dict = {}
-
-
-def _ivfpq_store(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_dir, source_version
-    from tagtree_spark.operators.similarity import materialize_ivfpq
-
-    tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVFPQ_CACHE:
-        _IVFPQ_CACHE[key] = cached_dir(
-            "ivfpq_store",
-            sf_dir,
-            source_version(_ivfpq_store, materialize_ivfpq),
-            lambda d: materialize_ivfpq(load_table(spark, sf_dir, "embeddings"), d),
-        )
-    return _IVFPQ_CACHE[key]
+# Persisted IVF+PQ store, like ivf_store for the uncompressed vectors.
+@artifact("ivfpq_store", materialize_ivfpq, kind="dir")
+def _ivfpq_store(spark, sf_dir, d):
+    materialize_ivfpq(load_table(spark, sf_dir, "embeddings"), d)
 
 
 @query(
@@ -8060,7 +7768,6 @@ def q210_volume_shipping(spark, sf_dir):
     supplier broadcast; the only real shuffle is lineitem ⋈ orders.
     Reference analogue: multi-way matcher conjunction over two label
     paths (/root/reference/src/index/index_server.cpp:93-136)."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
@@ -8134,7 +7841,6 @@ def q211_market_share(spark, sf_dir):
     dimension (part-filtered, supplier, both nations, region) broadcasts
     and only lineitem ⋈ orders shuffles; the share is ONE IEEE division of
     two exact decimal sums (rule 2)."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").where(F.col("p_type") == "ECONOMY")
     s = load_table(spark, sf_dir, "supplier")
@@ -8215,7 +7921,6 @@ def q212_promo_share(spark, sf_dir):
     broadcasts into the date-pruned lineitem scan, conditional + total
     decimal sums in one pass, percentage = 100 * one IEEE division (the
     100* multiplier is exact in binary fp, same in both engines)."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
@@ -8280,7 +7985,6 @@ def q213_top_supplier(spark, sf_dir):
     lineitem → per-supplier decimal revenue, ranked IN DECIMAL (ties
     broken by suppkey, so the rank is deterministic before any fp cast),
     then the 5 winners join the supplier dim (broadcast of 5 rows)."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
@@ -8345,7 +8049,6 @@ def q214_small_qty_revenue(spark, sf_dir):
     sum/cnt  ⇔  5*qty*cnt < sum (all positive decimals/ints — no fp until
     the single final division by 7). The per-part stats join is a
     broadcast (filtered brands only)."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").where(
         F.col("p_brand").isin("Brand#1", "Brand#2")
@@ -8394,7 +8097,6 @@ def q215_disjunctive_revenue(spark, sf_dir):
     disjunction so the part scan is pruned to the three brands BEFORE the
     join (broadcast), and the per-branch conjunctions evaluate post-join;
     revenue stays decimal until the final cast."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
     q = F.col("l_quantity")
@@ -8502,34 +8204,16 @@ def q216_kcore(spark, sf_dir):
 # r8 batch: streaming-built postings store (incremental search index)
 # --------------------------------------------------------------------------
 
-# Session-cached STREAMED postings store per (session, sf_dir): the corpus
-# ingested through PostingsSink in three micro-batches — the store the
-# incremental-index queries read. Like _POSTINGS_CACHE but exercising the
-# streaming write path (segments + version manifest) end-to-end.
-_STREAM_POSTINGS_CACHE: dict = {}
-
-
-def _stream_postings_store(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_dir, source_version
-    from tagtree_spark.streaming.postings import PostingsSink
-
-    tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _STREAM_POSTINGS_CACHE:
-
-        def _build(d):
-            sink = PostingsSink(d, compact_every=None)
-            docs = _docs(spark, sf_dir)
-            for b in range(3):
-                sink(docs.where(F.col("doc_id") % 3 == b), b)
-
-        _STREAM_POSTINGS_CACHE[key] = cached_dir(
-            "stream_postings",
-            sf_dir,
-            source_version(_stream_postings_store, PostingsSink),
-            _build,
-        )
-    return _STREAM_POSTINGS_CACHE[key]
+# STREAMED postings store: the corpus ingested through PostingsSink in
+# three micro-batches — the store the incremental-index queries read. Like
+# postings_store but exercising the streaming write path (segments +
+# version manifest) end-to-end.
+@artifact("stream_postings_store", PostingsSink, kind="dir")
+def _stream_postings_store(spark, sf_dir, d):
+    sink = PostingsSink(d, compact_every=None)
+    docs = _docs(spark, sf_dir)
+    for b in range(3):
+        sink(docs.where(F.col("doc_id") % 3 == b), b)
 
 
 @query("q217_stream_postings_bm25", _ORACLE_REG["q172_bm25"])
@@ -8718,7 +8402,6 @@ def q221_funnel(spark, sf_dir):
     base broadcasts back."""
     from tagtree_spark.session import persist_tracked
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.unix_micros("ts").alias("us")
     )
@@ -8853,7 +8536,6 @@ def q222_ann_mrr(spark, sf_dir):
     quantization-loss event q148's recall audit counts), plus a fixed-
     bracket MRR summary row (qid=-1). The eval harness every ANN
     deployment runs before trusting an index config."""
-    from tagtree_spark.operators.similarity import cosine, ivf_assignments
     from tagtree_spark.session import persist_tracked
 
     emb = _emb(spark, sf_dir)
@@ -9132,8 +8814,6 @@ def q225_subquery_max_rate(spark, sf_dir):
     per-series one; max over doubles is order-free."""
     from pyspark.sql import Window
 
-    from tagtree_spark.queries import _model
-
     _, _, samples = _model(spark, sf_dir)
     v = F.col("value").cast("decimal(18,4)")
     base = samples.select(
@@ -9178,51 +8858,24 @@ def q225_subquery_max_rate(spark, sf_dir):
     )
 
 
-# Session-cached cell-scoped kNN table (src, dst, score, rnk<=3): q226
-# reads it whole; q229's mutual-2NN graph is the rnk<=2 filter of the
-# same table — one assignment + pairwise pass instead of two.
-_KNN_CACHE: dict = {}
-
-
+# Cell-scoped kNN table (src, dst, score, rnk<=3): q226 reads it whole;
+# q229's mutual-2NN graph is the rnk<=2 filter of the same table — one
+# assignment + pairwise pass instead of two.
+@artifact("knn3", ivf_assignments, cosine)
 def _knn3(spark, sf_dir):
     from pyspark.sql import Window
 
-    from tagtree_spark.onetime_cache import cached_frame, source_version
-    from tagtree_spark.operators.similarity import cosine, ivf_assignments
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _KNN_CACHE.get(key)
-    if got is None:
-
-        def _build():
-            assigned = ivf_assignments(_emb(spark, sf_dir), 8).select(
-                "vec_id", "v", "cid"
-            )
-            a = assigned.select(
-                F.col("vec_id").alias("src"), F.col("v").alias("av"), "cid"
-            )
-            b = assigned.select(
-                F.col("vec_id").alias("dst"), F.col("v").alias("bv"), "cid"
-            )
-            w = Window.partitionBy("src").orderBy(F.col("score").desc(), "dst")
-            return (
-                a.join(b, "cid")
-                .where(F.col("src") != F.col("dst"))
-                .select("src", "dst", cosine("av", "bv").alias("score"))
-                .withColumn("rnk", F.row_number().over(w).cast("bigint"))
-                .where(F.col("rnk") <= 3)
-            )
-
-        got = cached_frame(
-            spark,
-            "knn3",
-            sf_dir,
-            source_version(_knn3, ivf_assignments, cosine),
-            _build,
-        ).persist()
-        got.count()
-        _KNN_CACHE[key] = got
-    return got
+    assigned = ivf_assignments(_emb(spark, sf_dir), 8).select("vec_id", "v", "cid")
+    a = assigned.select(F.col("vec_id").alias("src"), F.col("v").alias("av"), "cid")
+    b = assigned.select(F.col("vec_id").alias("dst"), F.col("v").alias("bv"), "cid")
+    w = Window.partitionBy("src").orderBy(F.col("score").desc(), "dst")
+    return (
+        a.join(b, "cid")
+        .where(F.col("src") != F.col("dst"))
+        .select("src", "dst", cosine("av", "bv").alias("score"))
+        .withColumn("rnk", F.row_number().over(w).cast("bigint"))
+        .where(F.col("rnk") <= 3)
+    )
 
 
 @query(
@@ -9339,7 +8992,6 @@ def q227_pq_recall(spark, sf_dir):
         _pq_scaled_subvectors,
         _pq_sqdist,
     )
-    from tagtree_spark.session import spread
 
     emb = _emb(spark, sf_dir)
     codes = _pqc(spark, sf_dir)
@@ -9456,43 +9108,16 @@ def q228_cluster_split(spark, sf_dir):
     )
 
 
-# Session-cached semantic CC labelling (vec_id, cluster_id) over the
-# mutual-2NN graph — q229 (cluster census) and q231 (label purity) share
-# one pointer-jumped components run.
-_SEMCL_CACHE: dict = {}
-
-
+# Semantic CC labelling (vec_id, cluster_id) over the mutual-2NN graph —
+# q229 (cluster census) and q231 (label purity) share one pointer-jumped
+# components run.
+@artifact("semantic_labels", _knn3, near_dup_clusters)
 def _semantic_labels(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_frame, source_version
-    from tagtree_spark.operators.dedup import near_dup_clusters
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _SEMCL_CACHE.get(key)
-    if got is None:
-
-        def _build():
-            knn = (
-                _knn3(spark, sf_dir).where(F.col("rnk") <= 2).select("src", "dst")
-            )
-            k2 = knn.select(F.col("src").alias("dst"), F.col("dst").alias("src"))
-            mutual = (
-                knn.join(k2, ["src", "dst"]).where(F.col("src") < F.col("dst"))
-            )
-            edges = mutual.select(
-                F.col("src").alias("doc_a"), F.col("dst").alias("doc_b")
-            )
-            return near_dup_clusters(edges, max_iters=30, compress=True)
-
-        got = cached_frame(
-            spark,
-            "semantic_labels",
-            sf_dir,
-            source_version(_semantic_labels, _knn3, near_dup_clusters),
-            _build,
-        ).persist()
-        got.count()
-        _SEMCL_CACHE[key] = got
-    return got
+    knn = _knn3(spark, sf_dir).where(F.col("rnk") <= 2).select("src", "dst")
+    k2 = knn.select(F.col("src").alias("dst"), F.col("dst").alias("src"))
+    mutual = knn.join(k2, ["src", "dst"]).where(F.col("src") < F.col("dst"))
+    edges = mutual.select(F.col("src").alias("doc_a"), F.col("dst").alias("doc_b"))
+    return near_dup_clusters(edges, max_iters=30, compress=True)
 
 
 @query(
@@ -9564,34 +9189,16 @@ def q229_semantic_clusters(spark, sf_dir):
     )
 
 
-# Session-cached STREAMED cluster-label store: the verified near-dup pairs
-# ingested through ClusterSink in two micro-batches (split by doc_a % 2,
-# so the second batch BRIDGES components discovered in the first — the
-# hard incremental case), then read back as the current labelling.
-_STREAM_CLUSTERS_CACHE: dict = {}
-
-
-def _stream_clusters_store(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_dir, source_version
-    from tagtree_spark.streaming.clusters import ClusterSink
-
-    tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _STREAM_CLUSTERS_CACHE:
-
-        def _build(d):
-            sink = ClusterSink(d)
-            pairs = _mh_pairs(spark, sf_dir)
-            for b in range(2):
-                sink(pairs.where(F.col("doc_a") % 2 == b), b)
-
-        _STREAM_CLUSTERS_CACHE[key] = cached_dir(
-            "stream_clusters",
-            sf_dir,
-            source_version(_stream_clusters_store, ClusterSink, _mh_pairs),
-            _build,
-        )
-    return _STREAM_CLUSTERS_CACHE[key]
+# STREAMED cluster-label store: the verified near-dup pairs ingested
+# through ClusterSink in two micro-batches (split by doc_a % 2, so the
+# second batch BRIDGES components discovered in the first — the hard
+# incremental case), then read back as the current labelling.
+@artifact("stream_clusters_store", ClusterSink, _mh_pairs, kind="dir")
+def _stream_clusters_store(spark, sf_dir, d):
+    sink = ClusterSink(d)
+    pairs = _mh_pairs(spark, sf_dir)
+    for b in range(2):
+        sink(pairs.where(F.col("doc_a") % 2 == b), b)
 
 
 @query("q230_stream_clusters", _Q45_ORACLE)
@@ -9746,7 +9353,6 @@ def q232_mincost_supplier(spark, sf_dir):
     (A/B at sf0.1: 1.12 vs 1.23 s, rows identical)."""
     from pyspark.sql import Window
 
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     supply = li.groupBy(
         F.col("l_partkey").alias("partkey"), F.col("l_suppkey").alias("suppkey")
@@ -9812,7 +9418,6 @@ def q233_nation_profit(spark, sf_dir):
     summed as DECIMAL(38,0)/HUGEINT (rules 7/11) — profit is then ONE IEEE
     subtraction of two exact-sum casts plus one division by 1000, both
     bit-identical across engines (rule 2 avoided: no fp accumulation)."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").where(F.col("p_name").like("%widget%"))
     s = load_table(spark, sf_dir, "supplier")
@@ -9884,7 +9489,6 @@ def q234_important_parts(spark, sf_dir):
     so the selectivity holds at every scale). The 1-row total broadcasts;
     products are DECIMAL(38,0) Spark-side / HUGEINT oracle-side (rule 11);
     share_ppm is exact integer division."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation").where(F.col("n_name") == "NATION_3")
@@ -9936,7 +9540,6 @@ def q235_order_count_distribution(spark, sf_dir):
     Pure integer counts; c_count is unique per output row so the ORDER BY
     is total. At scale the join shuffles on custkey once; the second
     groupBy is over at most max(c_count) rows."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     co = (
@@ -9980,7 +9583,6 @@ def q236_parts_supplier_counts(spark, sf_dir):
     anti-join (= NOT IN over a never-NULL key), then count(DISTINCT
     suppkey) per (brand, type, size). Both the distinct and the count-
     distinct shuffle on narrow key tuples only."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").where(
         (F.col("p_brand") != "Brand#3")
@@ -10035,7 +9637,6 @@ def q237_potential_promotion(spark, sf_dir):
     groupBy pass, broadcast part filter, DISTINCT suppkey, then a
     broadcast left-semi into the supplier dim. Integer-only predicate
     (2*q > total) — no fp anywhere."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").where(F.col("p_name").like("%widget%"))
     s = load_table(spark, sf_dir, "supplier")
@@ -10111,7 +9712,6 @@ def q238_sequence_match(spark, sf_dir):
     only)."""
     from tagtree_spark.operators.events import sequence_match
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return sequence_match(
         ev,
@@ -10172,7 +9772,6 @@ def q239_cuped(spark, sf_dir):
     adjustment is one fixed-shape fp expression (rule 12). Scale shape:
     one user-keyed shuffle, a 1-row pooled-stats broadcast, a 2-row
     variant agg."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     pre = F.col("ts") < F.lit("2024-01-16").cast("timestamp")
     v = F.round(F.col("value") * 1024).cast("bigint")
@@ -10231,69 +9830,53 @@ def q239_cuped(spark, sf_dir):
     )
 
 
-# Streamed CEP store, one per (session, sf dir): events split into two
-# interleaved micro-batches (event_id parity — every user's sequence
-# straddles both, timestamps interleaved), drained through
-# sequence_match_stream into a batch_id-stamped parquet log.
-_STREAM_CEP_CACHE: dict = {}
-
-
-def _stream_cep_store(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_dir, source_version
-    from tagtree_spark.streaming.cep import sequence_match_stream
-
-    tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _STREAM_CEP_CACHE:
-
-        def _build(d):
-            ev = load_table(spark, sf_dir, "events").select(
-                "user_id", "ts", "event_id", "event_type"
-            )
-            for b in (0, 1):
-                ev.where(F.col("event_id") % 2 == b).coalesce(1).write.parquet(
-                    f"{d}/in/b{b}"
-                )
-            schema = spark.read.parquet(f"{d}/in/b0").schema
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{d}/in/*")
-            )
-            out = sequence_match_stream(
-                stream,
-                pattern="s[vc]*p",
-                symbols={"signup": "s", "view": "v", "click": "c", "purchase": "p"},
-            )
-            outdir = f"{d}/out"
-
-            def _sink(df, bid):
-                df.withColumn("batch_id", F.lit(bid)).write.mode("append").parquet(
-                    outdir
-                )
-
-            q = (
-                out.writeStream.foreachBatch(_sink)
-                .outputMode("update")
-                .option("checkpointLocation", f"{d}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError(
-                    "q240 stream drain did not finish in 600s; refusing to "
-                    "cache a partial output store"
-                )
-
-        d = cached_dir(
-            "stream_cep",
-            sf_dir,
-            source_version(_stream_cep_store, sequence_match_stream),
-            _build,
+# Streamed CEP store: events split into two interleaved micro-batches
+# (event_id parity — every user's sequence straddles both, timestamps
+# interleaved), drained through sequence_match_stream into a
+# batch_id-stamped parquet log.
+@artifact(
+    "stream_cep_store", sequence_match_stream, kind="dir",
+    load=lambda spark, d: f"{d}/out",
+)
+def _stream_cep_store(spark, sf_dir, d):
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_id", "event_type"
+    )
+    for b in (0, 1):
+        ev.where(F.col("event_id") % 2 == b).coalesce(1).write.parquet(
+            f"{d}/in/b{b}"
         )
-        _STREAM_CEP_CACHE[key] = f"{d}/out"
-    return _STREAM_CEP_CACHE[key]
+    schema = spark.read.parquet(f"{d}/in/b0").schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{d}/in/*")
+    )
+    out = sequence_match_stream(
+        stream,
+        pattern="s[vc]*p",
+        symbols={"signup": "s", "view": "v", "click": "c", "purchase": "p"},
+    )
+    outdir = f"{d}/out"
+
+    def _sink(df, bid):
+        df.withColumn("batch_id", F.lit(bid)).write.mode("append").parquet(
+            outdir
+        )
+
+    q = (
+        out.writeStream.foreachBatch(_sink)
+        .outputMode("update")
+        .option("checkpointLocation", f"{d}/ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(600):
+        q.stop()
+        raise RuntimeError(
+            "q240 stream drain did not finish in 600s; refusing to "
+            "cache a partial output store"
+        )
 
 
 @query("q240_stream_cep", _ORACLE_REG["q238_sequence_match"])
@@ -10352,7 +9935,6 @@ def q241_l_diversity(spark, sf_dir):
     l_diversity), integer-only output."""
     from tagtree_spark.operators.profile import l_diversity
 
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     return l_diversity(c, ["c_nationkey", "c_mktsegment"], "c_acctbal", l=3)
 
@@ -10394,7 +9976,6 @@ def q242_diff_in_diff(spark, sf_dir):
     cells; the pivot is a driverless 4-way self-join of a 4-row frame."""
     from tagtree_spark.session import persist_tracked
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     cell = persist_tracked(
         ev.select(
@@ -10471,7 +10052,6 @@ def q243_token_freq_spectrum(spark, sf_dir):
     whole spectrum is integer-only (no fp log). Two narrow shuffles
     (token count, then ≤64 buckets); the token explode never carries
     doc bodies."""
-    tune(spark)
     d = spread(_docs(spark, sf_dir))
     tc = (
         d.select(F.explode(F.split(F.col("text"), " ")).alias("token"))
@@ -10544,7 +10124,6 @@ def q244_session_cep(spark, sf_dir):
 
     from tagtree_spark.operators.events import symbol_column
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     sym = symbol_column(
         {"signup": "s", "view": "v", "click": "c", "purchase": "p"}
@@ -10642,7 +10221,6 @@ def q245_pmi_collocations(spark, sf_dir):
     broadcast into the pair frame; top-50 is TakeOrdered."""
     from tagtree_spark.session import persist_tracked
 
-    tune(spark)
     d = spread(_docs(spark, sf_dir))
     toks = persist_tracked(d.select(F.split(F.col("text"), " ").alias("ws")))
     bg = (
@@ -10717,7 +10295,6 @@ def q246_rfm_segments(spark, sf_dir):
     across SFs, so the bands stay meaningful at any scale. Monetary
     band compares an EXACT decimal sum (a double sum could flip a
     boundary ulp, rule 2); avg is one final IEEE division."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     cm = o.groupBy("o_custkey").agg(
         F.datediff(
@@ -10798,7 +10375,6 @@ def q247_basket_rules(spark, sf_dir):
     support counts, confidence as exact integer ppm, lift =
     N·c(x,y)/(c(x)·c(y)) as one IEEE division of exact products.
     Top-100 is TakeOrdered."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     from tagtree_spark.session import persist_tracked
 
@@ -10883,7 +10459,6 @@ def q248_behavior_motifs(spark, sf_dir):
     support is one distinct + count. Alphabet^3 bounds the output."""
     from tagtree_spark.operators.events import symbol_column
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     sym = symbol_column(
         {"signup": "s", "view": "v", "click": "c", "purchase": "p", "error": "e"}
@@ -10948,7 +10523,6 @@ def q249_decayed_engagement(spark, sf_dir):
     power-of-two constant 2^60 (2^40 weight scale · 2^10 value scale ·
     2^10 normalization so scores print small). Map-only weighting + one
     user-keyed shuffle; rank is TakeOrdered."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     age = F.datediff(
         F.lit("2024-01-31").cast("date"), F.col("ts").cast("date")
@@ -11019,7 +10593,6 @@ def q250_cohort_ltv(spark, sf_dir):
     (first-event, cell agg) + a tiny window over cohort cells."""
     from pyspark.sql import Window
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     anchor = F.lit("2024-01-01").cast("date")
     v = F.round(F.col("value") * 1024).cast("bigint")
@@ -11093,7 +10666,6 @@ def q251_vocab_growth(spark, sf_dir):
 
     from tagtree_spark.session import persist_tracked
 
-    tune(spark)
     d = spread(_docs(spark, sf_dir))
     tok = persist_tracked(
         d.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("token"))
@@ -11141,7 +10713,6 @@ def q252_ship_lag_profile(spark, sf_dir):
     actually ship faster?). One lineitem⋈orders shuffle (the only
     corpus-sized join), integer-only output; the histogram is bounded
     by priorities × lag weeks."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     lag = li.join(o, li.l_orderkey == o.o_orderkey).select(
@@ -11205,57 +10776,30 @@ def q253_png_decode(spark, sf_dir):
 
 
 def one_time_builders():
-    """Registry of session-lived cache/store builds → callable(spark,
-    sf_dir) forcing each build (VERDICT r8 #5): bench.py runs these ONCE
-    before the timed query loop and reports their cost as a separate
-    ``one_time`` map, so per-query timings measure steady-state cost —
-    q217's first pass previously paid the whole streamed-store ingest
-    ([1.2s, 11.0s] spread) and polluted round-over-round comparison.
+    """The bench's one-time tier (VERDICT r8 #5): every registered
+    ``@artifact`` not marked ``one_time=False`` → callable(spark, sf_dir)
+    forcing its build. bench.py runs these ONCE before the timed query
+    loop and reports their cost as a separate ``one_time`` map, so
+    per-query timings measure steady-state cost — q217's first pass
+    previously paid the whole streamed-store ingest ([1.2s, 11.0s]
+    spread) and polluted round-over-round comparison. Registration order
+    puts each artifact after its declared deps, so a key's time is its
+    own build, not its inputs'.
 
     At cluster scale these are exactly the artifacts a deployment
     materializes as TABLES next to the corpus (see SCALE.md "Shared
     derived artifacts"), so 'one-time, amortized across every consumer'
     is their true cost model — not a per-query tax."""
-    from tagtree_spark import queries as _q
 
-    def _force(df):
-        df.write.format("noop").mode("overwrite").save()
+    def _force(got):
+        for df in got if isinstance(got, tuple) else (got,):
+            if isinstance(df, DataFrame):
+                df.write.format("noop").mode("overwrite").save()
 
     return {
-        "tsdb_model": lambda s, d: _force(_q._model(s, d)[1]),
-        "shingles": lambda s, d: _force(_sh(s, d)),
-        "shingle_pairs": lambda s, d: _force(_spc(s, d)),
-        "simhash_fp": lambda s, d: _force(_sfp(s, d)),
-        "mh_pairs": lambda s, d: _force(_mh_pairs(s, d)),
-        "cc_clusters": lambda s, d: _force(_clusters(s, d)),
-        "hyperplane_buckets": lambda s, d: _force(_wb(s, d)),
-        "pq_codes": lambda s, d: _force(_pqc(s, d)),
-        "bpe_train": lambda s, d: _force(_bpe(s, d)[1]),
-        "knn3": lambda s, d: _force(_knn3(s, d)),
-        "semantic_labels": lambda s, d: _force(_semantic_labels(s, d)),
-        "store_model": lambda s, d: _store_model(s, d),
-        "ivf_store": lambda s, d: _ivf_store(s, d),
-        "ivfpq_store": lambda s, d: _ivfpq_store(s, d),
-        "postings_store": lambda s, d: _postings_store(s, d),
-        "stream_postings_store": lambda s, d: _stream_postings_store(s, d),
-        "stream_clusters_store": lambda s, d: _stream_clusters_store(s, d),
-        "stream_cep_store": lambda s, d: _stream_cep_store(s, d),
-        "shingle_store": lambda s, d: _sh_store(s, d),
-        "wal_store": lambda s, d: _wal_store(s, d),
-        "wal_tail_log": lambda s, d: _wal_tail_log(s, d),
-        "compacted_store": lambda s, d: _compacted_store(s, d),
-        "dup_windows": lambda s, d: _force(_dupwin(s, d)),
-        "png_media": lambda s, d: _force(_png_media(s, d)),
-        "jpeg_media": lambda s, d: _force(_jpeg_media(s, d)),
-        "jpeg_color_media": lambda s, d: _force(_jpeg_color_media(s, d)),
-        "wal_live_tail_log": lambda s, d: _wal_live_tail_log(s, d),
-        "stream_drift_store": lambda s, d: _stream_drift_store(s, d),
-        "ckpt_compacted_store": lambda s, d: _ckpt_compacted_store(s, d),
-        "pca_base": lambda s, d: _force(_pca_base(s, d)),
-        "stream_pack_store": lambda s, d: _stream_pack_store(s, d),
-        "stream_rollup_store": lambda s, d: _stream_rollup_store(s, d),
-        "posting_pages": lambda s, d: _force(_posting_pages(s, d)),
-        "wb_store": lambda s, d: _wb_store_dir(s, d),
+        name: lambda s, d, get=get: _force(get(s, d))
+        for name, get in ARTIFACTS.items()
+        if get.one_time
     }
 
 
@@ -11266,25 +10810,20 @@ def one_time_builders():
 # a table next to the corpus — and the bucket layout is what lets every
 # consumer's hot operations (df-cap aggregate, pair self-join, both keyed
 # on s) run with ZERO Exchange (plan-pinned in test_plans).
-_SH_STORE_CACHE: dict = {}
-
-
+# Session-only: bucket metadata lives in the session catalog.
+@artifact("shingle_store", _sh, kind="value")
 def _sh_store(spark, sf_dir):
     import re as _re
     import tempfile
 
     from tagtree_spark.tsdb.store import write_bucketed
 
-    tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SH_STORE_CACHE:
-        tag = _re.sub(r"[^A-Za-z0-9]", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-        tbl = f"shingle_inv_{tag}"
-        d = tempfile.mkdtemp(prefix="tagtree-shingle-store-")
-        inv = _sh(spark, sf_dir).select("doc_id", F.explode("hs").alias("s"))
-        write_bucketed(inv, tbl, f"{d}/inv", ["s"], 16, sort_cols=["s"])
-        _SH_STORE_CACHE[key] = tbl
-    return _SH_STORE_CACHE[key]
+    tag = _re.sub(r"[^A-Za-z0-9]", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    tbl = f"shingle_inv_{tag}"
+    d = tempfile.mkdtemp(prefix="tagtree-shingle-store-")
+    inv = _sh(spark, sf_dir).select("doc_id", F.explode("hs").alias("s"))
+    write_bucketed(inv, tbl, f"{d}/inv", ["s"], 16, sort_cols=["s"])
+    return tbl
 
 
 @query("q254_shingle_store_jaccard", _ORACLE_REG["q32_ngram_jaccard"])
@@ -11353,7 +10892,6 @@ def q255_benford_audit(spark, sf_dir):
     zeros in either engine) — no log10, no float digit math. Exact
     integer counts; ONE final IEEE division per digit for the share.
     Map-only + one 9-row groupBy — scan-bound at any scale."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     cents = F.round(F.col("l_extendedprice") * 100).cast("bigint")
     d = li.select(
@@ -11591,7 +11129,6 @@ def q258_centroid_drift(spark, sf_dir):
     HUGEINT oracle-side per rule 11), divided once by (n_l·N)²·2^60.
     Shape: one narrow explode (vecs × dims), two integer groupBys, a
     broadcast-sized dim join — no fp sums anywhere (rule 2)."""
-    tune(spark)
     emb = spread(_emb(spark, sf_dir))
     s = emb.select(
         "label",
@@ -11668,7 +11205,6 @@ def q259_mixture_plan(spark, sf_dir):
     (identical // and % semantics on non-negative operands in both
     engines); ONE final IEEE division for the residual rate. One
     groupBy(source) + a broadcast 1-row total — scan-bound."""
-    tune(spark)
     d = spread(_docs(spark, sf_dir))
     per = d.groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_docs"),
@@ -11701,36 +11237,16 @@ def q259_mixture_plan(spark, sf_dir):
     )
 
 
-# Shared per-(session, sf dir) duplicated-window positions (doc_id, n, p)
-# — the ExactSubstr base pass (one window-hash scan + one df>=2 groupBy):
-# q260 (coverage), q274 (trim), and the trim-report/spectrum family all
-# read the same frame; without the cache each would re-hash every window.
-_DUPWIN_CACHE: dict = {}
-
-
-def _dupwin(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_frame, source_version
-    from tagtree_spark.operators.dedup import dup_window_positions
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _DUPWIN_CACHE.get(key)
-    if got is None:
-        got = cached_frame(
-            spark,
-            "dup_windows",
-            sf_dir,
-            source_version(_dupwin, dup_window_positions),
-            lambda: dup_window_positions(_docs(spark, sf_dir), window=8),
-            params="w=8",
-        ).persist()
-        got.count()
-        _DUPWIN_CACHE[key] = got
-    return got
+# Duplicated-window positions (doc_id, n, p) — the ExactSubstr base pass
+# (one window-hash scan + one df>=2 groupBy): q260 (coverage), q274
+# (trim), and the trim-report/spectrum family all read the same frame;
+# without the cache each would re-hash every window.
+@artifact("dup_windows", dup_window_positions, params=DUP_WINDOW_PARAMS)
+def _dupwin(spark, sf_dir, window):
+    return dup_window_positions(_docs(spark, sf_dir), window=window)
 
 
 def _q260_oracle() -> str:
-    from tagtree_spark.functions.hashing import duck_h60
-
     h = duck_h60("array_to_string(array_slice(ws, p + 1, p + 8), ' ')")
     return f"""
 WITH t AS (
@@ -11777,7 +11293,6 @@ def q260_dup_span_coverage(spark, sf_dir):
     explodes W=8 index rows per DUPLICATED window only (bounded by dup
     density, not corpus size). No string ever shuffles — only 60-bit
     hashes and integer positions."""
-    tune(spark)
     W = 8
     dup = _dupwin(spark, sf_dir)
     cov = (
@@ -11810,79 +11325,59 @@ def q260_dup_span_coverage(spark, sf_dir):
     )
 
 
-# One WAL fixture per (session, sf_dir): the derived series model written
-# through the BYTE-COMPATIBLE reference WAL format (tsdb/walfmt.py — the
-# reference's single-writer ingest log, so the write is deliberately
-# sequential; the READ is the distributed path under test).
-_WAL_CACHE: dict = {}
-
-
-def _wal_store(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_dir, source_version
-    from tagtree_spark.tsdb.walfmt import WalWriter, serialize_series
-
-    tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _WAL_CACHE:
-        from tagtree_spark.queries import _model
-
-        series, _, _ = _model(spark, sf_dir)
-        # epoch ms computed SPARK-SIDE as an exact bigint (unix_millis) —
-        # the earlier float round-trip (.timestamp() * 1000 then int())
-        # is the double-rounding hazard class (ADVICE r9); the WAL writer
-        # is single-writer by design (the reference's log is
-        # mutex-serialized, wal.cpp:176), so the driver streams rows
-        # ITERATOR-wise (toLocalIterator) instead of materializing the
-        # full series list — O(partition) not O(series) driver memory.
-        def _build(d):
-            rows = (
-                series.select(
-                    "tsid",
-                    F.unix_millis("first_seen").cast("bigint").alias("ts_ms"),
-                    "event_type",
-                    "user_bucket",
-                    "k_bucket",
-                )
-                .orderBy("tsid")
-                .toLocalIterator()
-            )
-            w = WalWriter(d, max_segment_size=64 * 4096)
-            batch = []
-            n_rows = 0
-            for r in rows:
-                n_rows += 1
-                batch.append(
-                    (
-                        int(r.tsid),
-                        int(r.ts_ms),
-                        [
-                            ("event_type", r.event_type),
-                            ("user_bucket", r.user_bucket),
-                            ("k_bucket", r.k_bucket),
-                        ],
-                    )
-                )
-                if len(batch) == 100:
-                    w.log_record(serialize_series(batch))
-                    batch = []
-            if batch:
-                w.log_record(serialize_series(batch))
-            w.write_checkpoint(
-                watermark=n_rows, segment=w.last_segment, max_timestamp=0
-            )
-            # close the head segment so the log ends page-aligned with an
-            # empty live head: batch readers and the page-granular stream
-            # tail (q268) then see exactly the same records
-            w.close_segment()
-            w.close()
-
-        _WAL_CACHE[key] = cached_dir(
-            "wal_store",
-            sf_dir,
-            source_version(_wal_store, WalWriter, serialize_series),
-            _build,
+# One WAL fixture: the derived series model written through the
+# BYTE-COMPATIBLE reference WAL format (tsdb/walfmt.py — the reference's
+# single-writer ingest log, so the write is deliberately sequential; the
+# READ is the distributed path under test). Epoch ms are computed
+# SPARK-SIDE as an exact bigint (unix_millis) — the earlier float
+# round-trip (.timestamp() * 1000 then int()) is the double-rounding
+# hazard class (ADVICE r9); the WAL writer is single-writer by design
+# (the reference's log is mutex-serialized, wal.cpp:176), so the driver
+# streams rows ITERATOR-wise (toLocalIterator) instead of materializing
+# the full series list — O(partition) not O(series) driver memory.
+@artifact("wal_store", WalWriter, serialize_series, kind="dir")
+def _wal_store(spark, sf_dir, d):
+    series, _, _ = _model(spark, sf_dir)
+    rows = (
+        series.select(
+            "tsid",
+            F.unix_millis("first_seen").cast("bigint").alias("ts_ms"),
+            "event_type",
+            "user_bucket",
+            "k_bucket",
         )
-    return _WAL_CACHE[key]
+        .orderBy("tsid")
+        .toLocalIterator()
+    )
+    w = WalWriter(d, max_segment_size=64 * 4096)
+    batch = []
+    n_rows = 0
+    for r in rows:
+        n_rows += 1
+        batch.append(
+            (
+                int(r.tsid),
+                int(r.ts_ms),
+                [
+                    ("event_type", r.event_type),
+                    ("user_bucket", r.user_bucket),
+                    ("k_bucket", r.k_bucket),
+                ],
+            )
+        )
+        if len(batch) == 100:
+            w.log_record(serialize_series(batch))
+            batch = []
+    if batch:
+        w.log_record(serialize_series(batch))
+    w.write_checkpoint(
+        watermark=n_rows, segment=w.last_segment, max_timestamp=0
+    )
+    # close the head segment so the log ends page-aligned with an
+    # empty live head: batch readers and the page-granular stream
+    # tail (q268) then see exactly the same records
+    w.close_segment()
+    w.close()
 
 
 @query(
@@ -11908,7 +11403,6 @@ def q261_wal_roundtrip(spark, sf_dir):
     reference's WAL is a single-writer log); at scale the one-task-per-
     128 MiB-segment read is the parallel side."""
     d = _wal_store(spark, sf_dir)
-    from tagtree_spark.tsdb.walfmt import read_wal_series
 
     got = read_wal_series(spark, d)
     return got.select(
@@ -11939,7 +11433,6 @@ def q262_forecast_revenue(spark, sf_dir):
     skipping), completing the engine's TPC-H sweep (Q1-Q22 now all
     covered in their schema-expressible form). Decimal-exact product
     sum, ONE final double cast (rules 1/2)."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     dec = lambda c: F.col(c).cast("decimal(18,4)")  # noqa: E731
     return (
@@ -12001,7 +11494,6 @@ def q263_cusum_changepoint(spark, sf_dir):
     (days × types rows), partitioned by type — no global window."""
     from pyspark.sql import Window
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     d = (
         ev.select(
@@ -12084,7 +11576,6 @@ def q265_hll_day_merge(spark, sf_dir):
         hll_registers,
     )
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").withColumn(
         "_day", F.expr("unix_millis(ts) div 86400000")
     )
@@ -12134,7 +11625,6 @@ def q266_order_backlog(spark, sf_dir):
     same day it was placed contributes zero open days ([start, end))."""
     from pyspark.sql import Window
 
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     epoch = F.lit("1990-01-01").cast("date")
@@ -12205,63 +11695,44 @@ def q267_bfs_layers(spark, sf_dir):
     return bfs_layers(_mh_pairs(spark, sf_dir), max_iters=30).orderBy("dist")
 
 
-# Drained tagtree_wal STREAM per (session, sf_dir): the WAL tailed through
-# the Python data source's streaming reader into a parquet log — q268
-# reads the drained result, so its driver row certifies the STREAMING
-# read path of the byte-level WAL source (offsets, closed-segment
-# visibility) against the same oracle as the batch round-trip.
-_WAL_TAIL_CACHE: dict = {}
+# Drained tagtree_wal STREAM: the WAL tailed through the Python data
+# source's streaming reader into a parquet log — q268 reads the drained
+# result, so its driver row certifies the STREAMING read path of the
+# byte-level WAL source (offsets, closed-segment visibility) against the
+# same oracle as the batch round-trip. The cached artifact is the DRAINED
+# OUTPUT of the stream reader, so the reader's own source is a version
+# dependency — editing WalStreamReader must force a re-drain.
+@artifact(
+    "wal_tail_log", _wal_store, WalStreamReader, kind="dir",
+    load=lambda spark, d: f"{d}/log",
+)
+def _wal_tail_log(spark, sf_dir, out):
+    wal_dir = _wal_store(spark, sf_dir)
+    register_wal_source(spark)
+    q = (
+        spark.readStream.format("tagtree_wal")
+        .option("path", wal_dir)
+        .load()
+        .writeStream.format("parquet")
+        .option("path", f"{out}/log")
+        .option("checkpointLocation", f"{out}/ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    # a timed-out drain must not be cached — a partially-drained
+    # log would make q268 fail with an unexplained hash mismatch
+    # for the rest of the session (ADVICE r9; same pattern as the
+    # other streaming fixtures)
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError("wal tail stream did not drain in 300s")
+    # FileStreamSink's _spark_metadata records ABSOLUTE file paths;
+    # after the cache's staging→final rename they dangle and the
+    # read lists zero files. Drop it — the log is then a plain
+    # relocatable parquet directory.
+    import shutil as _sh
 
-
-def _wal_tail_log(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_dir, source_version
-    from tagtree_spark.tsdb.walfmt import register_wal_source
-
-    tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _WAL_TAIL_CACHE:
-
-        def _build(out):
-            wal_dir = _wal_store(spark, sf_dir)
-            register_wal_source(spark)
-            q = (
-                spark.readStream.format("tagtree_wal")
-                .option("path", wal_dir)
-                .load()
-                .writeStream.format("parquet")
-                .option("path", f"{out}/log")
-                .option("checkpointLocation", f"{out}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            # a timed-out drain must not be cached — a partially-drained
-            # log would make q268 fail with an unexplained hash mismatch
-            # for the rest of the session (ADVICE r9; same pattern as the
-            # other streaming fixtures)
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("wal tail stream did not drain in 300s")
-            # FileStreamSink's _spark_metadata records ABSOLUTE file paths;
-            # after the cache's staging→final rename they dangle and the
-            # read lists zero files. Drop it — the log is then a plain
-            # relocatable parquet directory.
-            import shutil as _sh
-
-            _sh.rmtree(f"{out}/log/_spark_metadata", ignore_errors=True)
-
-        from tagtree_spark.tsdb import walfmt as _wf
-
-        d = cached_dir(
-            "wal_tail",
-            sf_dir,
-            # the cached artifact is the DRAINED OUTPUT of the stream
-            # reader, so the reader's own source is a version dependency —
-            # editing WalStreamReader must force a re-drain
-            source_version(_wal_tail_log, _wal_store, _wf.WalStreamReader),
-            _build,
-        )
-        _WAL_TAIL_CACHE[key] = f"{d}/log"
-    return _WAL_TAIL_CACHE[key]
+    _sh.rmtree(f"{out}/log/_spark_metadata", ignore_errors=True)
 
 
 @query("q268_wal_stream_tail", _ORACLE_REG["q261_wal_roundtrip"])
@@ -12379,90 +11850,70 @@ def q270_source_dup_rate(spark, sf_dir):
     )
 
 
-# Reference-format COMPACTED deployment fixture per (session, sf_dir):
-# pre-checkpoint series live ONLY in series files + symbol.tab (the
-# reference GC's them from the mem index after checkpoint,
+# Reference-format COMPACTED deployment fixture: pre-checkpoint series
+# live ONLY in series files + symbol.tab (the reference GC's them from the
+# mem index after checkpoint,
 # /root/reference/src/index/index_server.cpp:222-224), post-checkpoint
 # series live in the WAL, and checkpoint.meta marks the replay segment —
 # the exact on-disk state a compacted reference store hands a migration.
-_COMPACTED_CACHE: dict = {}
 _COMPACTED_SEG_SIZE = 128
 
 
-def _compacted_store(spark, sf_dir):
-    import os as _os
-
-    from tagtree_spark.onetime_cache import cached_dir, source_version
-    from tagtree_spark.tsdb.seriesfmt import SeriesStoreWriter
-    from tagtree_spark.tsdb.walfmt import WalWriter, serialize_series
-
-    tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _COMPACTED_CACHE:
-        from tagtree_spark.queries import _model
-
-        def _build(d):
-            series, _, _ = _model(spark, sf_dir)
-            n = series.count()
-            wm = (3 * n) // 5  # 60% of series are pre-checkpoint (compacted)
-            rows = (
-                series.select(
-                    "tsid",
-                    F.unix_millis("first_seen").cast("bigint").alias("ts_ms"),
-                    "event_type",
-                    "user_bucket",
-                    "k_bucket",
-                )
-                .orderBy("tsid")
-                .toLocalIterator()
-            )
-            wal_dir = _os.path.join(d, "wal")
-            sw = SeriesStoreWriter(d, segment_size=_COMPACTED_SEG_SIZE)
-            w = WalWriter(wal_dir, max_segment_size=16 * 4096)
-            batch = []
-            checkpointed = False
-            for r in rows:
-                labels = [
-                    ("event_type", r.event_type),
-                    ("user_bucket", r.user_bucket),
-                    ("k_bucket", r.k_bucket),
-                ]
-                if int(r.tsid) <= wm:
-                    # pre-checkpoint: compacted into the series files; its
-                    # WAL record ALSO exists (the log was written live) but
-                    # lies below the checkpoint segment, skipped on replay
-                    sw.add(int(r.tsid), labels)
-                elif not checkpointed:
-                    if batch:
-                        w.log_record(serialize_series(batch))
-                        batch = []
-                    seg = w.close_segment()
-                    w.write_checkpoint(
-                        watermark=wm, segment=seg, max_timestamp=0
-                    )
-                    checkpointed = True
-                batch.append((int(r.tsid), int(r.ts_ms), labels))
-                if len(batch) == 100:
-                    w.log_record(serialize_series(batch))
-                    batch = []
+@artifact(
+    "compacted_store", SeriesStoreWriter, WalWriter, serialize_series, kind="dir",
+    params={"segment_size": _COMPACTED_SEG_SIZE},
+)
+def _compacted_store(spark, sf_dir, d, segment_size):
+    series, _, _ = _model(spark, sf_dir)
+    n = series.count()
+    wm = (3 * n) // 5  # 60% of series are pre-checkpoint (compacted)
+    rows = (
+        series.select(
+            "tsid",
+            F.unix_millis("first_seen").cast("bigint").alias("ts_ms"),
+            "event_type",
+            "user_bucket",
+            "k_bucket",
+        )
+        .orderBy("tsid")
+        .toLocalIterator()
+    )
+    wal_dir = f"{d}/wal"
+    sw = SeriesStoreWriter(d, segment_size=segment_size)
+    w = WalWriter(wal_dir, max_segment_size=16 * 4096)
+    batch = []
+    checkpointed = False
+    for r in rows:
+        labels = [
+            ("event_type", r.event_type),
+            ("user_bucket", r.user_bucket),
+            ("k_bucket", r.k_bucket),
+        ]
+        if int(r.tsid) <= wm:
+            # pre-checkpoint: compacted into the series files; its
+            # WAL record ALSO exists (the log was written live) but
+            # lies below the checkpoint segment, skipped on replay
+            sw.add(int(r.tsid), labels)
+        elif not checkpointed:
             if batch:
                 w.log_record(serialize_series(batch))
-            if not checkpointed:  # degenerate: every series pre-checkpoint
-                seg = w.close_segment()
-                w.write_checkpoint(watermark=wm, segment=seg, max_timestamp=0)
-            sw.flush()
-            w.close()
-
-        _COMPACTED_CACHE[key] = cached_dir(
-            "compacted_store",
-            sf_dir,
-            source_version(
-                _compacted_store, SeriesStoreWriter, WalWriter, serialize_series
-            ),
-            _build,
-            params=str(_COMPACTED_SEG_SIZE),
-        )
-    return _COMPACTED_CACHE[key]
+                batch = []
+            seg = w.close_segment()
+            w.write_checkpoint(
+                watermark=wm, segment=seg, max_timestamp=0
+            )
+            checkpointed = True
+        batch.append((int(r.tsid), int(r.ts_ms), labels))
+        if len(batch) == 100:
+            w.log_record(serialize_series(batch))
+            batch = []
+    if batch:
+        w.log_record(serialize_series(batch))
+    if not checkpointed:  # degenerate: every series pre-checkpoint
+        seg = w.close_segment()
+        w.write_checkpoint(watermark=wm, segment=seg, max_timestamp=0)
+    sw.flush()
+    w.close()
 
 
 def _compacted_postings(spark, sf_dir):
@@ -12534,7 +11985,13 @@ def q272_compacted_get_labels(spark, sf_dir):
 # GC the version a long-lived reader might still pin; once is enough to
 # demonstrate the reader-isolated rewrite (the crash/race matrix lives in
 # tests/test_store.py).
-_CC_COMPACTED: set = set()
+@artifact("cc_compacted", _cc_store_dir, kind="value", one_time=False)
+def _cc_compacted_dir(spark, sf_dir) -> str:
+    from tagtree_spark.tsdb.store import versioned_compact
+
+    d = _cc_store_dir(spark, sf_dir)
+    versioned_compact(spark, d)
+    return d
 
 
 @query("q273_cc_store_compacted", _Q45_ORACLE)
@@ -12550,14 +12007,9 @@ def q273_cc_store_compacted(spark, sf_dir):
     second cache→table migration (VERDICT r9 #3): the labelling that
     every cluster consumer reads is a real store table, not a session
     persist."""
-    from tagtree_spark.tsdb.store import versioned_compact, versioned_read
+    from tagtree_spark.tsdb.store import versioned_read
 
-    d = _cc_store_dir(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CC_COMPACTED:
-        versioned_compact(spark, d)
-        _CC_COMPACTED.add(key)
-    return versioned_read(spark, d).orderBy("doc_id")
+    return versioned_read(spark, _cc_compacted_dir(spark, sf_dir)).orderBy("doc_id")
 
 
 def _q274_oracle() -> str:
@@ -12612,10 +12064,8 @@ def q274_exactsubstr_trim(spark, sf_dir):
     Scale shape: windows and token positions are narrow in-row
     transforms; the covered-set anti-join keys on (doc_id, idx) ints;
     the only corpus-sized shuffle is the per-doc reassembly groupBy."""
-    from tagtree_spark.functions.hashing import h60
     from tagtree_spark.operators.dedup import exactsubstr_trim
 
-    tune(spark)
     tr = exactsubstr_trim(
         _docs(spark, sf_dir), window=8, dup=_dupwin(spark, sf_dir)
     )
@@ -12697,7 +12147,6 @@ def q275_source_trim_report(spark, sf_dir):
     groupBy(source). The oracle recomputes coverage independently, so a
     green row re-proves the position bookkeeping through a second
     aggregate shape."""
-    tune(spark)
     per = _trim_token_deltas(spark, sf_dir)
     return (
         per.groupBy("source")
@@ -12775,7 +12224,6 @@ def q277_label_cardinality(spark, sf_dir):
     touched. One groupBy over the postings frame; the reference exposes
     this walk as its label_values/postings iteration
     (/root/reference/src/index/index_server.cpp:151-158)."""
-    from tagtree_spark.queries import _model
 
     _, postings, _ = _model(spark, sf_dir)
     return (
@@ -12817,7 +12265,6 @@ def q278_window_df_spectrum(spark, sf_dir):
     shuffle."""
     from tagtree_spark.operators.dedup import all_window_positions
 
-    tune(spark)
     wins = all_window_positions(_docs(spark, sf_dir), window=8).select("h")
     df = wins.groupBy("h").agg(F.count("*").cast("bigint").alias("occ"))
     return (
@@ -12896,7 +12343,6 @@ def q280_dedup_weighted_sampling(spark, sf_dir):
     the pipeline wants an unbiased representative rather than the
     smallest id). Exact integers; rides the CC store table + one
     broadcast-sized size join."""
-    from tagtree_spark.functions.hashing import h60
 
     cl = _clusters(spark, sf_dir)
     sz = cl.groupBy("cluster_id").agg(F.count("*").cast("bigint").alias("csize"))
@@ -12912,111 +12358,72 @@ def q280_dedup_weighted_sampling(spark, sf_dir):
     )
 
 
-# LIVE-tail WAL fixture per (session, sf_dir): the same series rows as
-# _wal_store but the head segment is NEVER closed — records are made
-# page-visible with flush_page() (the reference's WAL::flush durability
-# point) and the stream must serve them from the LIVE segment's flushed
-# pages (r10's page-granular offsets; the r9 reader would see nothing).
-_WAL_LIVE_CACHE: dict = {}
-
-
-def _wal_live_store(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_dir, source_version
-    from tagtree_spark.tsdb.walfmt import WalWriter, serialize_series
-
-    tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _WAL_LIVE_CACHE:
-        from tagtree_spark.queries import _model
-
-        def _build(d):
-            series, _, _ = _model(spark, sf_dir)
-            rows = (
-                series.select(
-                    "tsid",
-                    F.unix_millis("first_seen").cast("bigint").alias("ts_ms"),
-                    "event_type",
-                    "user_bucket",
-                    "k_bucket",
-                )
-                .orderBy("tsid")
-                .toLocalIterator()
+# LIVE-tail WAL fixture: the same series rows as _wal_store but the head
+# segment is NEVER closed — records are made page-visible with
+# flush_page() (the reference's WAL::flush durability point) and the
+# stream must serve them from the LIVE segment's flushed pages (r10's
+# page-granular offsets; the r9 reader would see nothing).
+@artifact("wal_live_store", WalWriter, serialize_series, kind="dir", one_time=False)
+def _wal_live_store(spark, sf_dir, d):
+    series, _, _ = _model(spark, sf_dir)
+    rows = (
+        series.select(
+            "tsid",
+            F.unix_millis("first_seen").cast("bigint").alias("ts_ms"),
+            "event_type",
+            "user_bucket",
+            "k_bucket",
+        )
+        .orderBy("tsid")
+        .toLocalIterator()
+    )
+    w = WalWriter(d)  # default 128 MiB cap: nothing ever rolls over
+    batch = []
+    for r in rows:
+        batch.append(
+            (
+                int(r.tsid),
+                int(r.ts_ms),
+                [
+                    ("event_type", r.event_type),
+                    ("user_bucket", r.user_bucket),
+                    ("k_bucket", r.k_bucket),
+                ],
             )
-            w = WalWriter(d)  # default 128 MiB cap: nothing ever rolls over
+        )
+        if len(batch) == 100:
+            w.log_record(serialize_series(batch))
             batch = []
-            for r in rows:
-                batch.append(
-                    (
-                        int(r.tsid),
-                        int(r.ts_ms),
-                        [
-                            ("event_type", r.event_type),
-                            ("user_bucket", r.user_bucket),
-                            ("k_bucket", r.k_bucket),
-                        ],
-                    )
-                )
-                if len(batch) == 100:
-                    w.log_record(serialize_series(batch))
-                    batch = []
-            if batch:
-                w.log_record(serialize_series(batch))
-            w.flush_page()  # durability point — segment stays LIVE
-            w.close()
-
-        _WAL_LIVE_CACHE[key] = cached_dir(
-            "wal_live_store",
-            sf_dir,
-            source_version(_wal_live_store, WalWriter, serialize_series),
-            _build,
-        )
-    return _WAL_LIVE_CACHE[key]
+    if batch:
+        w.log_record(serialize_series(batch))
+    w.flush_page()  # durability point — segment stays LIVE
+    w.close()
 
 
-_WAL_LIVE_TAIL_CACHE: dict = {}
+@artifact(
+    "wal_live_tail_log", _wal_live_store, WalStreamReader, kind="dir",
+    load=lambda spark, d: f"{d}/log",
+)
+def _wal_live_tail_log(spark, sf_dir, out):
+    wal_dir = _wal_live_store(spark, sf_dir)
+    register_wal_source(spark)
+    q = (
+        spark.readStream.format("tagtree_wal")
+        .option("path", wal_dir)
+        .load()
+        .writeStream.format("parquet")
+        .option("path", f"{out}/log")
+        .option("checkpointLocation", f"{out}/ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError("live wal tail stream did not drain in 300s")
+    # drop the absolute-path _spark_metadata (see _wal_tail_log)
+    import shutil as _sh
 
-
-def _wal_live_tail_log(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_dir, source_version
-    from tagtree_spark.tsdb.walfmt import register_wal_source
-
-    tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _WAL_LIVE_TAIL_CACHE:
-
-        def _build(out):
-            wal_dir = _wal_live_store(spark, sf_dir)
-            register_wal_source(spark)
-            q = (
-                spark.readStream.format("tagtree_wal")
-                .option("path", wal_dir)
-                .load()
-                .writeStream.format("parquet")
-                .option("path", f"{out}/log")
-                .option("checkpointLocation", f"{out}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("live wal tail stream did not drain in 300s")
-            # drop the absolute-path _spark_metadata (see _wal_tail_log)
-            import shutil as _sh
-
-            _sh.rmtree(f"{out}/log/_spark_metadata", ignore_errors=True)
-
-        from tagtree_spark.tsdb import walfmt as _wf
-
-        d = cached_dir(
-            "wal_live_tail",
-            sf_dir,
-            source_version(
-                _wal_live_tail_log, _wal_live_store, _wf.WalStreamReader
-            ),
-            _build,
-        )
-        _WAL_LIVE_TAIL_CACHE[key] = f"{d}/log"
-    return _WAL_LIVE_TAIL_CACHE[key]
+    _sh.rmtree(f"{out}/log/_spark_metadata", ignore_errors=True)
 
 
 @query("q281_wal_live_tail", _ORACLE_REG["q261_wal_roundtrip"])
@@ -13079,59 +12486,39 @@ def q282_symtab_dictionary(spark, sf_dir):
     ).orderBy("ref")
 
 
-# CHECKPOINT-COMPACTION fixture per (session, sf_dir) — the REVERSE
-# migration: q271 proved this engine can READ a compacted reference
-# store; here the engine WRITES one. The byte-level WAL is replayed
-# (distributed parse) and every series is persisted into
-# reference-format series files + symbol.tab — the reference's own
-# checkpoint step (replay → persist series → GC the mem index,
-# /root/reference/src/index/index_server.cpp:205-232), after which the
-# compacted WAL prefix is dead weight. The file writes are single-writer
-# (faithful: the reference's series manager serializes behind a mutex);
-# rows stream through toLocalIterator.
-_CKPT_COMPACT_CACHE: dict = {}
-
-
-def _ckpt_compacted_store(spark, sf_dir):
-    from tagtree_spark.onetime_cache import cached_dir, source_version
-    from tagtree_spark.tsdb.seriesfmt import SeriesStoreWriter
-    from tagtree_spark.tsdb.walfmt import read_wal_series
-
-    tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CKPT_COMPACT_CACHE:
-
-        def _build(d):
-            wal_dir = _wal_store(spark, sf_dir)
-            rows = (
-                read_wal_series(spark, wal_dir)
-                .select("tsid", "labels")
-                .orderBy("tsid")
-                .toLocalIterator()
-            )
-            sw = SeriesStoreWriter(d, segment_size=_COMPACTED_SEG_SIZE)
-            for r in rows:
-                # fixed label order (the model's three labels): ref
-                # assignment stays deterministic regardless of map iteration
-                sw.add(
-                    int(r.tsid),
-                    [
-                        (n, r.labels[n])
-                        for n in ("event_type", "user_bucket", "k_bucket")
-                    ],
-                )
-            sw.flush()
-
-        _CKPT_COMPACT_CACHE[key] = cached_dir(
-            "ckpt_compacted",
-            sf_dir,
-            source_version(
-                _ckpt_compacted_store, SeriesStoreWriter, _wal_store
-            ),
-            _build,
-            params=str(_COMPACTED_SEG_SIZE),
+# CHECKPOINT-COMPACTION fixture — the REVERSE migration: q271 proved
+# this engine can READ a compacted reference store; here the engine
+# WRITES one. The byte-level WAL is replayed (distributed parse) and every
+# series is persisted into reference-format series files + symbol.tab —
+# the reference's own checkpoint step (replay → persist series → GC the
+# mem index, /root/reference/src/index/index_server.cpp:205-232), after
+# which the compacted WAL prefix is dead weight. The file writes are
+# single-writer (faithful: the reference's series manager serializes
+# behind a mutex); rows stream through toLocalIterator.
+@artifact(
+    "ckpt_compacted_store", SeriesStoreWriter, _wal_store, kind="dir",
+    params={"segment_size": _COMPACTED_SEG_SIZE},
+)
+def _ckpt_compacted_store(spark, sf_dir, d, segment_size):
+    wal_dir = _wal_store(spark, sf_dir)
+    rows = (
+        read_wal_series(spark, wal_dir)
+        .select("tsid", "labels")
+        .orderBy("tsid")
+        .toLocalIterator()
+    )
+    sw = SeriesStoreWriter(d, segment_size=segment_size)
+    for r in rows:
+        # fixed label order (the model's three labels): ref
+        # assignment stays deterministic regardless of map iteration
+        sw.add(
+            int(r.tsid),
+            [
+                (n, r.labels[n])
+                for n in ("event_type", "user_bucket", "k_bucket")
+            ],
         )
-    return _CKPT_COMPACT_CACHE[key]
+    sw.flush()
 
 
 @query(
@@ -13215,7 +12602,6 @@ def q284_dedup_family_venn(spark, sf_dir):
     each estimator alone, this closes the loop BETWEEN them. Both pair
     sets are LSH/df-cap bounded; the Venn is one full-outer join on
     (doc_a, doc_b)."""
-    from tagtree_spark.operators.dedup import ngram_jaccard_pairs
 
     mh = (
         _mh_pairs(spark, sf_dir)
@@ -13342,7 +12728,6 @@ def q286_trim_mixture_drift(spark, sf_dir):
     table. Shares are floor-ppm of exact bigint sums (non-negative, so
     // and div agree); drift is the difference of the two already-
     floored shares (exact integer subtraction)."""
-    tune(spark)
     per = _trim_token_deltas(spark, sf_dir)
     bysrc = per.groupBy("source").agg(
         F.sum("n_before").cast("bigint").alias("tb"),
@@ -13932,7 +13317,6 @@ def q296_permutation_test(spark, sf_dir):
     # 2.3–3.0 s → 1.9–2.4 s at sf0.1; a 33-wide one-groupBy form without
     # the explode was also tried and read SLOWER, 3.2–5.6 s — the wide
     # conditional decimal aggregate defeats codegen).
-    from tagtree_spark.session import spread
 
     # r13: spread BEFORE the ×33 explode + per-row md5 + decimal partial
     # aggregate — on the unsplittable one-row-group events scan all of it
@@ -14122,63 +13506,47 @@ def q298_jpeg_rgb(spark, sf_dir):
     )
 
 
-_STREAM_DRIFT_CACHE: dict = {}
-
-
-def _stream_drift_store(spark, sf_dir):
+@artifact(
+    "stream_drift_store", DistributionSink, kind="dir",
+    load=lambda spark, d: f"{d}/store",
+)
+def _stream_drift_store(spark, sf_dir, d):
     """Drain the events table through the streaming DistributionSink
     (3 file-batches, availableNow) and cache the segment store path —
     the stream-fed twin of q295's value summary."""
-    from tagtree_spark.onetime_cache import cached_dir, source_version
-    from tagtree_spark.streaming.drift import DistributionSink
-
-    tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _STREAM_DRIFT_CACHE:
-
-        def _build(d):
-            ev = load_table(spark, sf_dir, "events").select(
-                "event_id", "event_type", "user_id", "value"
-            )
-            for b in (0, 1, 2):
-                ev.where(F.col("event_id") % 3 == b).coalesce(1).write.parquet(
-                    f"{d}/in/b{b}"
-                )
-            schema = spark.read.parquet(f"{d}/in/b0").schema
-            # grp is stored at the LCM granularity (user_id % 6): counts
-            # merge losslessly, so ONE accumulated state serves both the %2
-            # tests (MW/KS — regroup_distribution(dist, 2)) and the %3
-            # Kruskal-Wallis split (regroup mod 3) — see streaming/drift.py.
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{d}/in/*")
-                .withColumn("grp", F.col("user_id") % 6)
-            )
-            q = (
-                stream.writeStream.foreachBatch(
-                    DistributionSink(f"{d}/store", compact_every=2)
-                )
-                .outputMode("update")
-                .option("checkpointLocation", f"{d}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError(
-                    "q299 stream drain did not finish in 600s; refusing to "
-                    "cache a partial distribution store"
-                )
-
-        d = cached_dir(
-            "stream_drift",
-            sf_dir,
-            source_version(_stream_drift_store, DistributionSink),
-            _build,
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "event_type", "user_id", "value"
+    )
+    for b in (0, 1, 2):
+        ev.where(F.col("event_id") % 3 == b).coalesce(1).write.parquet(
+            f"{d}/in/b{b}"
         )
-        _STREAM_DRIFT_CACHE[key] = f"{d}/store"
-    return _STREAM_DRIFT_CACHE[key]
+    schema = spark.read.parquet(f"{d}/in/b0").schema
+    # grp is stored at the LCM granularity (user_id % 6): counts
+    # merge losslessly, so ONE accumulated state serves both the %2
+    # tests (MW/KS — regroup_distribution(dist, 2)) and the %3
+    # Kruskal-Wallis split (regroup mod 3) — see streaming/drift.py.
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{d}/in/*")
+        .withColumn("grp", F.col("user_id") % 6)
+    )
+    q = (
+        stream.writeStream.foreachBatch(
+            DistributionSink(f"{d}/store", compact_every=2)
+        )
+        .outputMode("update")
+        .option("checkpointLocation", f"{d}/ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(600):
+        q.stop()
+        raise RuntimeError(
+            "q299 stream drain did not finish in 600s; refusing to "
+            "cache a partial distribution store"
+        )
 
 
 @query("q299_stream_ks", _ORACLE_REG["q295_ks_distance"])
@@ -15293,18 +14661,18 @@ _PCA_ITERS = 10
 _PCA_SCALE = 1_048_576.0  # 2^20 (rule 8: exact exponent-shift multiply)
 
 
-def _pca_matvec(c: str, v: str, engine: str) -> str:
+def _pca_matvec(c: str, v: str, engine: str, dim: int = _PCA_DIM) -> str:
     """C·v with the fold order PINNED k = 1..64 (rule 3: Spark aggregate
     ≡ DuckDB list_reduce(list_prepend) — same bracketing), so the double
     results are bit-identical across engines."""
     if engine == "spark":
         return (
-            f"transform({c}, row -> aggregate(transform(sequence(1, {_PCA_DIM}), "
+            f"transform({c}, row -> aggregate(transform(sequence(1, {dim}), "
             f"k -> element_at(row, k) * element_at({v}, k)), 0D, (acc, x) -> acc + x))"
         )
     return (
         f"list_transform({c}, row -> list_reduce(list_prepend(0.0, "
-        f"list_transform(range(1, {_PCA_DIM + 1}), k -> row[k] * {v}[k])), "
+        f"list_transform(range(1, {dim + 1}), k -> row[k] * {v}[k])), "
         f"(acc, x) -> acc + x))"
     )
 
@@ -15408,37 +14776,20 @@ def q314_pca_power_iteration(spark, sf_dir):
     ).orderBy("i")
 
 
-_PCA_CACHE: dict = {}
-
-
-def _pca_base(spark, sf_dir):
-    """One-row converged PCA frame (c, v, lam_scaled) cached per
-    (session, sf) — q314 explodes the component, q315 projects the
-    corpus onto it; the moment build and the 10 localCheckpointed
-    iterations run ONCE (the _sh/_wb shared-stage rule)."""
-    from tagtree_spark.onetime_cache import cached_frame, source_version
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PCA_CACHE:
-        return _PCA_CACHE[key]
-    fin = cached_frame(
-        spark,
-        "pca_base",
-        sf_dir,
-        source_version(_pca_base_build, _pca_matvec, _pca_normalize),
-        lambda: _pca_base_build(spark, sf_dir),
-        params=f"{_PCA_DIM}|{_PCA_ITERS}|{_PCA_SCALE}",
-    ).localCheckpoint(eager=True)
-    _PCA_CACHE[key] = fin
-    return fin
-
-
-def _pca_base_build(spark, sf_dir):
+@artifact(
+    "pca_base", _pca_matvec, _pca_normalize,
+    params={"dim": _PCA_DIM, "iters": _PCA_ITERS, "scale": _PCA_SCALE},
+)
+def _pca_base(spark, sf_dir, dim, iters, scale):
+    """One-row converged PCA frame (c, v, lam_scaled) — q314 explodes the
+    component, q315 projects the corpus onto it; the moment build and the
+    10 localCheckpointed iterations run ONCE (the _sh/_wb shared-stage
+    rule)."""
     emb = load_table(spark, sf_dir, "embeddings")
     r = emb.select(
         "vec_id",
         F.expr(
-            f"transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {_PCA_SCALE}) AS BIGINT))"
+            f"transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {scale}) AS BIGINT))"
         ).alias("rl"),
     )
     t1 = r.select("vec_id", "rl", F.posexplode("rl").alias("i0", "ri")).select(
@@ -15473,17 +14824,17 @@ def _pca_base_build(spark, sf_dir):
         F.array_sort(F.collect_list(F.struct("i", "row"))).alias("ir")
     ).select(
         F.expr("transform(ir, p -> p.row)").alias("c"),
-        F.expr(f"transform(sequence(1, {_PCA_DIM}), k -> 0.125D)").alias("v"),
+        F.expr(f"transform(sequence(1, {dim}), k -> 0.125D)").alias("v"),
     )
     cur = base
-    for _ in range(_PCA_ITERS):
-        mv = _pca_matvec("c", "v", "spark")
+    for _ in range(iters):
+        mv = _pca_matvec("c", "v", "spark", dim)
         cur = cur.select(
             "c", F.expr(_pca_normalize(mv, "spark")).alias("v")
         ).localCheckpoint(eager=True)
-    lam_terms = _pca_matvec("c", "v", "spark")
+    lam_terms = _pca_matvec("c", "v", "spark", dim)
     lam = (
-        f"aggregate(transform(sequence(1, {_PCA_DIM}), "
+        f"aggregate(transform(sequence(1, {dim}), "
         f"k -> element_at(v, k) * element_at(({lam_terms}), k)), 0D, (acc, x) -> acc + x)"
     )
     return cur.select("c", "v", F.expr(lam).cast("double").alias("lam_scaled"))
@@ -16138,7 +15489,6 @@ def q321_t_closeness(spark, sf_dir):
 
 
 def _q322_oracle() -> str:
-    from tagtree_spark.functions.hashing import duck_h60
     from tagtree_spark.operators.sketch import HLL_ALPHA, HLL_M
 
     h = duck_h60("CAST(user_id AS VARCHAR)")
@@ -16249,10 +15599,11 @@ def q322_sliding_hll(spark, sf_dir):
     )
 
 
-_STREAM_PACK_CACHE: dict = {}
-
-
-def _stream_pack_store(spark, sf_dir):
+@artifact(
+    "stream_pack_store", kind="dir", load=lambda spark, d: f"{d}/store",
+    params={"seq_len": _Q319_SEQLEN},
+)
+def _stream_pack_store(spark, sf_dir, d, seq_len):
     """Drain documents through a packing-manifest sink in 3 doc_id-range
     micro-batches: each batch extends the manifest with its docs'
     sequence coordinates, continuing from the token total of all PRIOR
@@ -16263,94 +15614,75 @@ def _stream_pack_store(spark, sf_dir):
     in (mtime, path) order)."""
     import glob as _glob
 
-    from tagtree_spark.onetime_cache import cached_dir, source_version
-
-    tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _STREAM_PACK_CACHE:
-        return _STREAM_PACK_CACHE[key]
-    L = _Q319_SEQLEN
-
-    def _build(d):
-        docs = _docs(spark, sf_dir).select(
-            "doc_id",
-            F.size(F.split(F.col("text"), " ")).cast("bigint").alias("n_tok"),
-        )
-        hi = docs.agg(F.max("doc_id")).collect()[0][0] or 0
-        cut1, cut2 = hi // 3, 2 * hi // 3
-        for b, cond in enumerate(
-            [
-                F.col("doc_id") <= cut1,
-                (F.col("doc_id") > cut1) & (F.col("doc_id") <= cut2),
-                F.col("doc_id") > cut2,
-            ]
-        ):
-            docs.where(cond).coalesce(1).write.parquet(f"{d}/in/b{b}")
-        schema = spark.read.parquet(f"{d}/in/b0").schema
-        store = f"{d}/store"
-
-        def sink(batch_df, batch_id: int) -> None:
-            sp = batch_df.sparkSession
-            from pyspark.sql import Window
-
-            prior = sorted(_glob.glob(f"{store}/seg-*"))
-            tot0 = 0
-            keep = [s for s in prior if int(s.rsplit("-", 1)[-1]) < batch_id]
-            if keep:
-                from functools import reduce as _red
-
-                pri = _red(
-                    lambda a, b2: a.unionByName(b2),
-                    (sp.read.parquet(s) for s in keep),
-                )
-                tot0 = pri.agg(F.sum("n_tok")).collect()[0][0] or 0
-            w = Window.orderBy("doc_id").rowsBetween(
-                Window.unboundedPreceding, -1
-            )
-            man = (
-                batch_df.withColumn(
-                    "cum_before",
-                    F.coalesce(F.sum("n_tok").over(w), F.lit(0))
-                    + F.lit(int(tot0)),
-                )
-                .select(
-                    "doc_id",
-                    "n_tok",
-                    F.expr(f"cum_before DIV {L}")
-                    .cast("bigint")
-                    .alias("first_seq"),
-                    F.expr(f"(cum_before + n_tok - 1) DIV {L}")
-                    .cast("bigint")
-                    .alias("last_seq"),
-                    (F.col("cum_before") % L).cast("bigint").alias("seq_offset"),
-                )
-            )
-            man.write.mode("overwrite").parquet(f"{store}/seg-{batch_id:010d}")
-
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{d}/in/*")
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", f"{d}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q323 stream drain did not finish in 600s")
-
-    d = cached_dir(
-        "stream_pack",
-        sf_dir,
-        source_version(_stream_pack_store),
-        _build,
-        params=str(L),
+    L = seq_len
+    docs = _docs(spark, sf_dir).select(
+        "doc_id",
+        F.size(F.split(F.col("text"), " ")).cast("bigint").alias("n_tok"),
     )
+    hi = docs.agg(F.max("doc_id")).collect()[0][0] or 0
+    cut1, cut2 = hi // 3, 2 * hi // 3
+    for b, cond in enumerate(
+        [
+            F.col("doc_id") <= cut1,
+            (F.col("doc_id") > cut1) & (F.col("doc_id") <= cut2),
+            F.col("doc_id") > cut2,
+        ]
+    ):
+        docs.where(cond).coalesce(1).write.parquet(f"{d}/in/b{b}")
+    schema = spark.read.parquet(f"{d}/in/b0").schema
     store = f"{d}/store"
-    _STREAM_PACK_CACHE[key] = store
-    return store
+
+    def sink(batch_df, batch_id: int) -> None:
+        sp = batch_df.sparkSession
+        from pyspark.sql import Window
+
+        prior = sorted(_glob.glob(f"{store}/seg-*"))
+        tot0 = 0
+        keep = [s for s in prior if int(s.rsplit("-", 1)[-1]) < batch_id]
+        if keep:
+            from functools import reduce as _red
+
+            pri = _red(
+                lambda a, b2: a.unionByName(b2),
+                (sp.read.parquet(s) for s in keep),
+            )
+            tot0 = pri.agg(F.sum("n_tok")).collect()[0][0] or 0
+        w = Window.orderBy("doc_id").rowsBetween(
+            Window.unboundedPreceding, -1
+        )
+        man = (
+            batch_df.withColumn(
+                "cum_before",
+                F.coalesce(F.sum("n_tok").over(w), F.lit(0))
+                + F.lit(int(tot0)),
+            )
+            .select(
+                "doc_id",
+                "n_tok",
+                F.expr(f"cum_before DIV {L}")
+                .cast("bigint")
+                .alias("first_seq"),
+                F.expr(f"(cum_before + n_tok - 1) DIV {L}")
+                .cast("bigint")
+                .alias("last_seq"),
+                (F.col("cum_before") % L).cast("bigint").alias("seq_offset"),
+            )
+        )
+        man.write.mode("overwrite").parquet(f"{store}/seg-{batch_id:010d}")
+
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{d}/in/*")
+        .writeStream.foreachBatch(sink)
+        .outputMode("update")
+        .option("checkpointLocation", f"{d}/ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(600):
+        q.stop()
+        raise RuntimeError("q323 stream drain did not finish in 600s")
 
 
 @query("q323_stream_packing_manifest", _ORACLE_REG["q319_sequence_packing"])
@@ -16938,7 +16270,6 @@ _Q329_COLS = [
 
 
 def _q329_oracle() -> str:
-    from tagtree_spark.functions.hashing import duck_h60
     from tagtree_spark.operators.sketch import HLL_ALPHA, HLL_M
 
     parts = "\nUNION ALL\n".join(
@@ -17114,7 +16445,6 @@ def q330_int8_quantization(spark, sf_dir):
 
 
 def _q331_oracle() -> str:
-    from tagtree_spark.functions.hashing import duck_h60
     from tagtree_spark.operators.sketch import logq_exprs
 
     bucket, _lo, _hi = logq_exprs("s", "duckdb")
@@ -17179,7 +16509,6 @@ def q331_quantile_stratified_sample(spark, sf_dir):
     one keep-gate pass."""
     from pyspark.sql import Window
 
-    from tagtree_spark.functions.hashing import h60
     from tagtree_spark.operators.sketch import logq_exprs
 
     bucket, _lo, _hi = logq_exprs("s", "spark")
@@ -17242,79 +16571,61 @@ def q331_quantile_stratified_sample(spark, sf_dir):
     ).orderBy("stratum")
 
 
-_STREAM_ROLLUP_CACHE: dict = {}
-
-
-def _stream_rollup_store(spark, sf_dir):
+@artifact(
+    "stream_rollup_store", RollupSink, kind="dir",
+    load=lambda spark, d: f"{d}/store",
+)
+def _stream_rollup_store(spark, sf_dir, d):
     """Drain events through the RollupSink continuous aggregate at DAY
     resolution (3 micro-batches + mid-stream compaction): value is
     staged in exact centi-units (floor(v·100 + 0.5) — integer-valued
     doubles, so the sink's DECIMAL sums are exact) and event_type rides
     as a dense sorted code (rollup tsids are bigint)."""
-    from tagtree_spark.onetime_cache import cached_dir, source_version
-    from tagtree_spark.streaming.rollup import RollupSink
+    from pyspark.sql import Window
 
-    tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _STREAM_ROLLUP_CACHE:
-        return _STREAM_ROLLUP_CACHE[key]
-
-    def _build(d):
-        from pyspark.sql import Window
-
-        ev = load_table(spark, sf_dir, "events")
-        types = ev.select("event_type").distinct()
-        wcode = Window.orderBy("event_type")
-        codes = types.select(
-            "event_type", F.row_number().over(wcode).cast("bigint").alias("tsid")
-        )
-        staged = ev.join(F.broadcast(codes), "event_type").select(
-            "event_id",
-            "tsid",
-            "ts",
-            # floor(x·100 + 0.5), NOT round(x·100): F.round on DOUBLE goes
-            # through the shortest-string repr while DuckDB rounds the exact
-            # binary value — they can disagree at .5 boundaries for arbitrary
-            # doubles (ADVICE r10). floor/+/× are pure IEEE ops, bit-identical
-            # in both engines for ANY input, and equal to round() on the
-            # centi-precision grid events.value actually lives on.
-            F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-            .cast("double")
-            .alias("value"),
-        )
-        for b in (0, 1, 2):
-            staged.where(F.col("event_id") % 3 == b).coalesce(1).write.parquet(
-                f"{d}/in/b{b}"
-            )
-        schema = spark.read.parquet(f"{d}/in/b0").schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{d}/in/*")
-            .select("tsid", "ts", "value")
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                RollupSink(f"{d}/store", minutes=1440, compact_every=2)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", f"{d}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q332 stream drain did not finish in 600s")
-
-    d = cached_dir(
-        "stream_rollup",
-        sf_dir,
-        source_version(_stream_rollup_store, RollupSink),
-        _build,
+    ev = load_table(spark, sf_dir, "events")
+    types = ev.select("event_type").distinct()
+    wcode = Window.orderBy("event_type")
+    codes = types.select(
+        "event_type", F.row_number().over(wcode).cast("bigint").alias("tsid")
     )
-    store = f"{d}/store"
-    _STREAM_ROLLUP_CACHE[key] = store
-    return store
+    staged = ev.join(F.broadcast(codes), "event_type").select(
+        "event_id",
+        "tsid",
+        "ts",
+        # floor(x·100 + 0.5), NOT round(x·100): F.round on DOUBLE goes
+        # through the shortest-string repr while DuckDB rounds the exact
+        # binary value — they can disagree at .5 boundaries for arbitrary
+        # doubles (ADVICE r10). floor/+/× are pure IEEE ops, bit-identical
+        # in both engines for ANY input, and equal to round() on the
+        # centi-precision grid events.value actually lives on.
+        F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
+        .cast("double")
+        .alias("value"),
+    )
+    for b in (0, 1, 2):
+        staged.where(F.col("event_id") % 3 == b).coalesce(1).write.parquet(
+            f"{d}/in/b{b}"
+        )
+    schema = spark.read.parquet(f"{d}/in/b0").schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{d}/in/*")
+        .select("tsid", "ts", "value")
+    )
+    q = (
+        stream.writeStream.foreachBatch(
+            RollupSink(f"{d}/store", minutes=1440, compact_every=2)
+        )
+        .outputMode("update")
+        .option("checkpointLocation", f"{d}/ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(600):
+        q.stop()
+        raise RuntimeError("q332 stream drain did not finish in 600s")
 
 
 @query(
@@ -17816,11 +17127,8 @@ def q337_gini_concentration(spark, sf_dir):
 # tsdb/pagefmt.py docstring for file:line cites).
 # --------------------------------------------------------------------------
 
-_PP_CACHE: dict = {}
-_SYMREF_CACHE: dict = {}
-
-
-def _symbol_refs(spark, sf_dir):
+@artifact("symbol_refs", kind="value", one_time=False)
+def _symbol_table(spark, sf_dir):
     """Deterministic SymbolTable frame (symbol, ref): every label name and
     value plus the EMPTY string, refs dense by sort order — '' sorts first
     and gets ref 0, which is exactly the stamped empty-value ref the
@@ -17829,45 +17137,42 @@ def _symbol_refs(spark, sf_dir):
     any bijection works as long as the dictionary travels with the pages
     (our symbol.tab twin, tsdb/seriesfmt.py). Tiny frame — computed once
     per (session, sf): tens of symbols, every decode branch reuses the
-    collected map."""
+    collected map. → (frame, {ref: symbol})."""
     from pyspark.sql import Window
 
-    from tagtree_spark.queries import _model
+    _, postings, _ = _model(spark, sf_dir)
+    syms = (
+        postings.select(F.col("name").alias("symbol"))
+        .union(postings.select(F.col("value").alias("symbol")))
+        .union(spark.createDataFrame([("",)], "symbol string"))
+        .distinct()
+    )
+    w = Window.orderBy("symbol")
+    rows = [
+        (r["symbol"], int(r["ref"]))
+        for r in syms.select(
+            "symbol",
+            (F.row_number().over(w) - 1).cast("bigint").alias("ref"),
+        ).collect()
+    ]
+    # pagefmt's encode_sorted_list_page default empty_value_ref=0
+    # depends on this convention — assert it where the table is built
+    assert ("", 0) in rows, "empty symbol must hold ref 0"
+    return (
+        spark.createDataFrame(rows, "symbol string, ref bigint").persist(),
+        {ref: sym for sym, ref in rows},
+    )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _SYMREF_CACHE.get(key)
-    if got is None:
-        _, postings, _ = _model(spark, sf_dir)
-        syms = (
-            postings.select(F.col("name").alias("symbol"))
-            .union(postings.select(F.col("value").alias("symbol")))
-            .union(spark.createDataFrame([("",)], "symbol string"))
-            .distinct()
-        )
-        w = Window.orderBy("symbol")
-        rows = [
-            (r["symbol"], int(r["ref"]))
-            for r in syms.select(
-                "symbol",
-                (F.row_number().over(w) - 1).cast("bigint").alias("ref"),
-            ).collect()
-        ]
-        # pagefmt's encode_sorted_list_page default empty_value_ref=0
-        # depends on this convention — assert it where the table is built
-        assert ("", 0) in rows, "empty symbol must hold ref 0"
-        got = (
-            spark.createDataFrame(rows, "symbol string, ref bigint").persist(),
-            {ref: sym for sym, ref in rows},
-        )
-        _SYMREF_CACHE[key] = got
-    return got[0]
+
+def _symbol_refs(spark, sf_dir):
+    return _symbol_table(spark, sf_dir)[0]
 
 
 def _symbol_map(spark, sf_dir) -> dict:
-    _symbol_refs(spark, sf_dir)
-    return _SYMREF_CACHE[(spark.sparkContext.applicationId, sf_dir)][1]
+    return _symbol_table(spark, sf_dir)[1]
 
 
+@artifact("posting_pages", pf, _symbol_table)
 def _posting_pages(spark, sf_dir):
     """Page-image table (name, value, page_type, segsel, page BINARY)
     built DISTRIBUTED: the density chooser picks each name's layout from
@@ -17878,127 +17183,104 @@ def _posting_pages(spark, sf_dir):
     executor encodes independently. At 100 TB the groupBy keys ARE the
     reference's page boundaries, so construction parallelism equals page
     count. Cached cross-session (content-addressed)."""
-    from tagtree_spark.onetime_cache import cached_frame, source_version
-    from tagtree_spark.tsdb import pagefmt as pf
+    from functools import reduce
 
-    tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _PP_CACHE.get(key)
-    if got is not None:
-        return got
+    import pandas as pd
 
-    def _build():
-        import pandas as pd
-
-        from functools import reduce
-
-        from tagtree_spark.queries import _model
-
-        _, postings, _ = _model(spark, sf_dir)
-        syms = _symbol_refs(spark, sf_dir)
-        p = (
-            postings.select(
-                "name",
-                "value",
-                "tsid",
-                F.unix_millis("last_seen").cast("bigint").alias("ms"),
-            )
-            .join(
-                F.broadcast(
-                    syms.select(
-                        F.col("symbol").alias("name"),
-                        F.col("ref").alias("name_ref"),
-                    )
-                ),
-                "name",
-            )
-            .join(
-                F.broadcast(
-                    syms.select(
-                        F.col("symbol").alias("value"),
-                        F.col("ref").alias("value_ref"),
-                    )
-                ),
-                "value",
-            )
+    _, postings, _ = _model(spark, sf_dir)
+    syms = _symbol_refs(spark, sf_dir)
+    p = (
+        postings.select(
+            "name",
+            "value",
+            "tsid",
+            F.unix_millis("last_seen").cast("bigint").alias("ms"),
         )
-        pc = (
-            postings.groupBy("name")
-            .agg(
-                F.countDistinct("value").alias("n_vals"),
-                F.count("*").alias("total"),
-            )
-            .collect()  # bounded: one row per label NAME
-        )
-        types = {
-            r["name"]: pf.choose_page_type(int(r["n_vals"]), int(r["total"]))
-            for r in pc
-        }
-        bitmap_names = [n for n, t in types.items() if t == pf.TYPE_BITMAP]
-        sorted_names = [n for n, t in types.items() if t == pf.TYPE_SORTED_LIST]
-        out_schema = (
-            "name string, value string, page_type string, "
-            "segsel bigint, page binary"
-        )
-
-        def enc_bitmap(keys, pdf):
-            name, value = keys
-            name_ref = int(pdf["name_ref"].iloc[0])
-            value_ref = int(pdf["value_ref"].iloc[0])
-            end_ms = int(pdf["ms"].max())
-            rows = [
-                (name, value, pf.TYPE_BITMAP, segsel, pg)
-                for segsel, pg in pf.build_bitmap_pages(
-                    name_ref, value_ref, end_ms, [int(t) for t in pdf["tsid"]]
+        .join(
+            F.broadcast(
+                syms.select(
+                    F.col("symbol").alias("name"),
+                    F.col("ref").alias("name_ref"),
                 )
-            ]
-            return pd.DataFrame(
-                rows, columns=["name", "value", "page_type", "segsel", "page"]
-            )
-
-        def enc_sorted(keys, pdf):
-            (name,) = keys
-            name_ref = int(pdf["name_ref"].iloc[0])
-            end_ms = int(pdf["ms"].max())
-            items = sorted(
-                zip(
-                    (int(v) for v in pdf["value_ref"]),
-                    (int(t) for t in pdf["tsid"]),
+            ),
+            "name",
+        )
+        .join(
+            F.broadcast(
+                syms.select(
+                    F.col("symbol").alias("value"),
+                    F.col("ref").alias("value_ref"),
                 )
-            )
-            rows = [
-                (name, "", pf.TYPE_SORTED_LIST, idx, pg)
-                for idx, pg in pf.build_sorted_list_pages(name_ref, end_ms, items)
-            ]
-            return pd.DataFrame(
-                rows, columns=["name", "value", "page_type", "segsel", "page"]
-            )
+            ),
+            "value",
+        )
+    )
+    pc = (
+        postings.groupBy("name")
+        .agg(
+            F.countDistinct("value").alias("n_vals"),
+            F.count("*").alias("total"),
+        )
+        .collect()  # bounded: one row per label NAME
+    )
+    types = {
+        r["name"]: pf.choose_page_type(int(r["n_vals"]), int(r["total"]))
+        for r in pc
+    }
+    bitmap_names = [n for n, t in types.items() if t == pf.TYPE_BITMAP]
+    sorted_names = [n for n, t in types.items() if t == pf.TYPE_SORTED_LIST]
+    out_schema = (
+        "name string, value string, page_type string, "
+        "segsel bigint, page binary"
+    )
 
-        parts = []
-        if bitmap_names:
-            parts.append(
-                p.where(F.col("name").isin(bitmap_names))
-                .groupBy("name", "value")
-                .applyInPandas(enc_bitmap, out_schema)
+    def enc_bitmap(keys, pdf):
+        name, value = keys
+        name_ref = int(pdf["name_ref"].iloc[0])
+        value_ref = int(pdf["value_ref"].iloc[0])
+        end_ms = int(pdf["ms"].max())
+        rows = [
+            (name, value, pf.TYPE_BITMAP, segsel, pg)
+            for segsel, pg in pf.build_bitmap_pages(
+                name_ref, value_ref, end_ms, [int(t) for t in pdf["tsid"]]
             )
-        if sorted_names:
-            parts.append(
-                p.where(F.col("name").isin(sorted_names))
-                .groupBy("name")
-                .applyInPandas(enc_sorted, out_schema)
-            )
-        return reduce(lambda a, b: a.unionByName(b), parts)
+        ]
+        return pd.DataFrame(
+            rows, columns=["name", "value", "page_type", "segsel", "page"]
+        )
 
-    got = cached_frame(
-        spark,
-        "posting_pages",
-        sf_dir,
-        source_version(_posting_pages, pf),
-        _build,
-    ).persist()
-    got.count()
-    _PP_CACHE[key] = got
-    return got
+    def enc_sorted(keys, pdf):
+        (name,) = keys
+        name_ref = int(pdf["name_ref"].iloc[0])
+        end_ms = int(pdf["ms"].max())
+        items = sorted(
+            zip(
+                (int(v) for v in pdf["value_ref"]),
+                (int(t) for t in pdf["tsid"]),
+            )
+        )
+        rows = [
+            (name, "", pf.TYPE_SORTED_LIST, idx, pg)
+            for idx, pg in pf.build_sorted_list_pages(name_ref, end_ms, items)
+        ]
+        return pd.DataFrame(
+            rows, columns=["name", "value", "page_type", "segsel", "page"]
+        )
+
+    parts = []
+    if bitmap_names:
+        parts.append(
+            p.where(F.col("name").isin(bitmap_names))
+            .groupBy("name", "value")
+            .applyInPandas(enc_bitmap, out_schema)
+        )
+    if sorted_names:
+        parts.append(
+            p.where(F.col("name").isin(sorted_names))
+            .groupBy("name")
+            .applyInPandas(enc_sorted, out_schema)
+        )
+    return reduce(lambda a, b: a.unionByName(b), parts)
 
 
 def _pages_postings(spark, sf_dir, name=None, value=None):
@@ -18016,7 +17298,6 @@ def _pages_postings(spark, sf_dir, name=None, value=None):
     label's pages. Sorted-list pages pack many values of a name under
     value='', so the value prune applies to bitmap pages only and the
     item-level filter stays with the caller."""
-    from tagtree_spark.tsdb import pagefmt as pf
 
     pages = _posting_pages(spark, sf_dir)
     if name is not None:
@@ -18175,32 +17456,19 @@ def q339_pages_conjunction(spark, sf_dir):
 # partition directories.
 # --------------------------------------------------------------------------
 
-_WB_STORE_DIRS: dict = {}
-
-
-def _wb_store_dir(spark, sf_dir) -> str:
-    from tagtree_spark.onetime_cache import cached_dir, source_version
-    from tagtree_spark.operators.similarity import bucketed_embeddings
+# The derived plane count is part of the layout identity (VERDICT r11
+# #1): a corpus-growth-driven re-derivation must move the store key, never
+# serve 4-plane partitions to an 8-plane prober.
+@artifact(
+    "wb_store", _wb, bucketed_embeddings, kind="dir",
+    params={"n_planes": _wb_planes},
+)
+def _wb_store_dir(spark, sf_dir, d, n_planes):
     from tagtree_spark.tsdb.store import versioned_overwrite
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    d = _WB_STORE_DIRS.get(key)
-    if d is None:
-        d = cached_dir(
-            "wb_store",
-            sf_dir,
-            source_version(_wb_store_dir, _wb, bucketed_embeddings),
-            lambda p: versioned_overwrite(
-                _wb(spark, sf_dir), p, partition_cols=["bucket"]
-            ),
-            # the derived plane count is part of the layout identity
-            # (VERDICT r11 #1): a corpus-growth-driven re-derivation must
-            # move the store key, never serve 4-plane partitions to an
-            # 8-plane prober
-            params=f"planes={_wb_planes(spark, sf_dir)}",
-        )
-        _WB_STORE_DIRS[key] = d
-    return d
+    versioned_overwrite(
+        _wb(spark, sf_dir, n_planes=n_planes), d, partition_cols=["bucket"]
+    )
 
 
 @query("q340_wb_store_ann", _ORACLE_REG["q33_lsh_ann"])
@@ -18422,7 +17690,6 @@ def q345_threshold_sweep(spark, sf_dir):
     cross-multiplication filter over the SAME pair frame (computed once,
     never re-shingled). Thresholds below the 50% candidate floor would
     need a lower band calibration — documented, not silently extended."""
-    from tagtree_spark.operators.dedup import ngram_jaccard_pairs
     from tagtree_spark.session import persist_tracked
 
     # the pair frame feeds THREE branches (pair counts + both doc stacks);
@@ -18546,8 +17813,6 @@ def q347_resets(spark, sf_dir):
     window + one same-key groupBy (single shuffle)."""
     from tagtree_spark.tsdb.promql import resets_over_time
 
-    from tagtree_spark.queries import _model
-
     _, _, samples = _model(spark, sf_dir)
     return resets_over_time(samples).orderBy("tsid")
 
@@ -18594,7 +17859,6 @@ def q348_page_density(spark, sf_dir):
     arithmetic — so a pagination bug (one row spilled to a phantom page,
     one bit set in the wrong segment) breaks the driver hash. Integer
     ppm; decode is the same Arrow pass as q338."""
-    from tagtree_spark.tsdb import pagefmt as pf
 
     pages = _posting_pages(spark, sf_dir)
 
@@ -18852,7 +18116,6 @@ def q349_promql_expr(spark, sf_dir):
     query's own oracle. The reference delegates expression evaluation to
     the external promql library (README.org:11-24); this is the in-engine
     capstone over the selector parser (VERDICT r8 #6 → r11 #6)."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -18897,7 +18160,6 @@ def q350_promql_expr_filtered(spark, sf_dir):
     analogue of Prometheus' "now"), and the outer max collapses per
     series. One matcher read + one (tsid, day) window + two same-key
     groupBys — no shuffle beyond the per-series one at any corpus size."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, postings, samples = _model(spark, sf_dir)
@@ -18978,9 +18240,7 @@ def q351_cow_tree_walk(spark, sf_dir):
     reference's single-writer compaction path, bounded by index
     cardinality (distinct (name, value, segsel)), never event volume."""
     from tagtree_spark.functions.hashing import h60_py
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb import cowfmt as cf
-    from tagtree_spark.tsdb import pagefmt as pf
 
     _, postings, _ = _model(spark, sf_dir)
     sym_ref = {s: r for r, s in _symbol_map(spark, sf_dir).items()}
@@ -19109,7 +18369,6 @@ def q352_promql_agg_by(spark, sf_dir):
     tsid order (rule 12) ≡ the oracle's list_reduce over list(r ORDER BY
     tsid) — bit-identical bracketing; group size is bounded by the
     label-vocabulary series count, never event volume."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     series, _, samples = _model(spark, sf_dir)
@@ -19141,7 +18400,6 @@ def q353_promql_agg_global(spark, sf_dir):
     per-day series count and hottest counter increase, both order-free
     aggregates over the decimal-exact increase values (one row per day
     regardless of corpus size)."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -19178,7 +18436,6 @@ def q354_promql_topk_expr(spark, sf_dir):
     partitions by bucket over the SERIES-bounded rate vector — one
     bounded sort per day, never event rows; composes as a vector (a
     further agg or scalar op could wrap it)."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -19215,7 +18472,6 @@ def q355_promql_delta(spark, sf_dir):
     timestamps), the subtraction done in DECIMAL and cast ONCE — exact
     cross-engine. One (tsid, day) window pass, same shuffle budget as
     rate()."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -19251,7 +18507,6 @@ def q356_promql_vector_binop(spark, sf_dir):
     engines divide the identical pair). Unmatched rows drop (inner
     join); zero denominators can't occur here (a bucket exists only
     with ≥1 sample) but the evaluator's guard drops them generally."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -19286,7 +18541,6 @@ def q357_promql_offset_wow(spark, sf_dir):
     The same (tsid, day) window base pass feeds both sides — Catalyst
     reuses the shuffle (same grouping key), so WoW costs one extra
     self-join of a vocabulary-bounded frame."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -19364,7 +18618,6 @@ def q359_promql_quantile_expr(spark, sf_dir):
     arithmetic ((9n+9) DIV 10) because ceil(0.9·n) in doubles reads 10
     at n=10 (0.9 isn't a binary fraction). One (tsid, day) window pass,
     the same shuffle budget as every range function."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -19419,7 +18672,6 @@ def q360_expr_irate(spark, sf_dir):
     [100y] range puts the whole fixture in one bucket, so the values
     equal the original per-series operator and the oracle is q65's
     chain with the bucket key added."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -19450,7 +18702,6 @@ def q361_expr_idelta(spark, sf_dir):
     """``idelta(events_total[100y])``: q88's last-minus-previous gauge
     delta (one IEEE subtraction of raw sample doubles) per (tsid,
     bucket), series with <2 samples emitting nothing like PromQL."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -19495,7 +18746,6 @@ def q362_expr_deriv(spark, sf_dir):
     slope (centered integer-second x, decimal y, order-independent
     sums, ONE double division) per (tsid, bucket); zero-variance groups
     drop (PromQL emits nothing for them)."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -19531,7 +18781,6 @@ def q363_expr_predict_linear(spark, sf_dir):
     moments, then the SAME fixed IEEE chain as q86's oracle
     (intercept = (Σy − slope·Σx)/n, pred = intercept + slope·(span+t))
     spelled identically in both engines."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -19563,7 +18812,6 @@ def q364_expr_stddev(spark, sf_dir):
     moments (order-independent), variance in exact decimal arithmetic,
     ONE double division + ONE correctly-rounded sqrt — per (tsid,
     bucket) through the grammar."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -19595,7 +18843,6 @@ def q365_expr_stdvar_weekly(spark, sf_dir):
     """``stdvar_over_time(events_total[1w])``: population variance per
     (series, week) — the q69 moment discipline on REAL aligned buckets
     (not the one-bucket [100y] trick), proving the family's bucketing."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -19636,7 +18883,6 @@ def q366_expr_mad(spark, sf_dir):
     """``mad_over_time(events_total[100y])``: q116's discrete median +
     MAD rank picks per (tsid, bucket) — selections and one IEEE
     subtract/abs each, no averaging, cross-engine exact."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -19683,7 +18929,6 @@ def q367_expr_holt_winters(spark, sf_dir):
     time-ordered values ≡ the oracle's recursive step-per-rank CTE,
     identical IEEE op order per step. Factors 0.5/0.25 are exactly
     representable so 1−α / 1−β are exact literals in both engines."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -19725,7 +18970,6 @@ def q368_expr_histogram_quantile(spark, sf_dir):
     implicit-value-bucket interpolation per (tsid, bucket) — exact
     integer cumulative target rank from φ's exact decimal form (9/10 →
     (9·total+9) DIV 10), one linear interpolation in the hit bucket."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -19762,7 +19006,6 @@ def q369_expr_clamp(spark, sf_dir):
     clamp is a pure least/greatest SELECTION on the day-rate vector
     (cross-engine exact — no arithmetic), then the order-free max
     aggregation over the label dimension."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     series, _, samples = _model(spark, sf_dir)
@@ -19792,7 +19035,6 @@ def q370_expr_math(spark, sf_dir):
     the instant-vector math family — abs is exact, IEEE sqrt is
     correctly rounded, so the composed doubles hash-match; exp/ln stay
     honestly NotImplemented (libm divergence between engines)."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     series, _, samples = _model(spark, sf_dir)
@@ -19830,7 +19072,6 @@ def q371_expr_label_replace(spark, sf_dir):
     the derived label immediately groups the aggregation — the PromQL
     relabel-then-aggregate idiom from one string. Same regex/replacement
     as the driver-green q56."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     series, _, samples = _model(spark, sf_dir)
@@ -19862,7 +19103,6 @@ def q372_expr_label_join(spark, sf_dir):
     "event_type", "user_bucket"))``: q73's separator-join label
     derivation on the carried series frame, grouped by the composite
     label — pure string concatenation, no arithmetic."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     series, _, samples = _model(spark, sf_dir)
@@ -19895,7 +19135,6 @@ def q373_expr_absent(spark, sf_dir):
     other, and a present selector emits nothing (pinned by unit test).
     An unregistered metric name is absent by definition (PromQL's one
     place where an unknown name is an answer, not an error)."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, postings, samples = _model(spark, sf_dir)
@@ -19930,7 +19169,6 @@ def q374_expr_count_values(spark, sf_dir):
     by floor() so the group key is an exact integer (grouping raw
     doubles cross-engine is undefined under different aggregation
     orders)."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -19970,7 +19208,6 @@ def q375_expr_at_instant(spark, sf_dir):
     (tsid, eval_ts) shuffle) — the instant-eval wall clock supplied
     EXPLICITLY in the string, retiring the r12 NotImplementedError
     class. The oracle is q46's chain at the single timestamp."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, postings, samples = _model(spark, sf_dir)
@@ -20014,7 +19251,6 @@ def q376_expr_at_agg(spark, sf_dir):
     into the aggregation operators like any bucketed vector; the sum of
     raw sample doubles folds sequentially in tsid order (rule 12) ≡ the
     oracle's list_reduce."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     series, _, samples = _model(spark, sf_dir)
@@ -20061,7 +19297,6 @@ def q377_expr_metric_registry(spark, sf_dir):
     for select(), now through the expression front-end; the store
     postings scan keeps its partition pruning — plan-pinned in
     test_plans.py)."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     series, _, samples = _model(spark, sf_dir)
@@ -20111,7 +19346,6 @@ def q378_expr_cmp_filter(spark, sf_dir):
     semantics — the vector's elements where the comparison holds, value
     passed through untouched (pure double comparison, cross-engine
     exact). Comparisons bind looser than arithmetic, like PromQL."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -20138,7 +19372,6 @@ def q379_expr_or_union(spark, sf_dir):
     (a naive UNION ALL would double the > 0.01 rows and break the
     row-count gate). Equivalent to the single looser filter, which is
     the oracle."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -20178,7 +19411,6 @@ def q380_expr_unless(spark, sf_dir):
     0)``: the (tsid, bucket) anti-join set operator — day-increases for
     series-days with NO counter reset (the clean-counter screen). Both
     operands share a domain, so the oracle is the joined nr = 0 filter."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -20207,7 +19439,6 @@ def q381_expr_and(spark, sf_dir):
     """``increase(...) and (resets(...) > 0)``: the (tsid, bucket)
     semi-join complement of q380 — increases ONLY where a reset
     occurred (the suspect-counter screen)."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -20240,7 +19471,6 @@ def q382_expr_without(spark, sf_dir):
     listed ones (bookkeeping columns like label_hash never group).
     Resolves to by(event_type, user_bucket) on the fixture model; the
     fold is rule-12 sequential in tsid order like every sum."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     series, _, samples = _model(spark, sf_dir)
@@ -20288,7 +19518,6 @@ def q383_expr_stddev_agg(spark, sf_dir):
     arbitrary doubles, rule 8) and the variance is ONE fixed IEEE chain
     (n·Σv² − (Σv)²)/n² spelled identically in both engines, plus one
     correctly-rounded sqrt."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     series, _, samples = _model(spark, sf_dir)
@@ -20334,7 +19563,6 @@ def q384_expr_quantile_agg(spark, sf_dir):
     rank-⌈0.9n⌉ element under the total (value, tsid) order, integer
     rank arithmetic (q359's discipline applied across the series
     dimension instead of time)."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -20379,7 +19607,6 @@ def q385_expr_on_ratio(spark, sf_dir):
     sequential fold, and join on (on-labels, bucket); division drops
     zero denominators (rule 18's documented deviation). The division is
     ONE IEEE op on two fold results — bit-identical cross-engine."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     series, postings, samples = _model(spark, sf_dir)
@@ -20411,7 +19638,6 @@ def q386_expr_bool_modifier(spark, sf_dir):
     modifier — every element kept with a 0/1 value instead of filtering
     (the alert-expression building block). Pure comparison + literal
     pick, cross-engine exact."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     _, _, samples = _model(spark, sf_dir)
@@ -20450,7 +19676,6 @@ def q387_expr_group_left(spark, sf_dir):
     from one string). The group aggregate is label-vocabulary-sized and
     broadcast; the division is ONE IEEE op of a raw rate over a fold
     result — bit-identical cross-engine; zero denominators drop."""
-    from tagtree_spark.queries import _model
     from tagtree_spark.tsdb.exprlang import evaluate
 
     series, _, samples = _model(spark, sf_dir)

@@ -116,7 +116,7 @@ def spread(df, min_partitions: int | None = None):
 # Those caches must not outlive the query — bench/parity run 50 queries in
 # one session and untracked persists would accumulate (ADVICE r2). A blanket
 # spark.catalog.clearCache() is wrong here: it would also evict the
-# intentionally long-lived derived-model cache (queries._MODEL_CACHE).
+# intentionally long-lived shared artifacts (onetime_cache.artifact).
 # --------------------------------------------------------------------------
 
 _TRACKED: list = []

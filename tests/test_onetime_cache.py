@@ -247,3 +247,87 @@ def test_orphan_sweep_removes_stale_foreign_staging(cache_env):
     assert not os.path.exists(stale)
     assert os.path.exists(fresh)
     assert os.path.exists(os.path.join(committed, "a"))
+
+
+# -- the @artifact registry ---------------------------------------------------
+
+ONE_TIME_KEYS = {
+    "tsdb_model", "shingles", "shingle_pairs", "simhash_fp", "mh_pairs",
+    "cc_clusters", "hyperplane_buckets", "pq_codes", "bpe_train", "knn3",
+    "semantic_labels", "store_model", "ivf_store", "ivfpq_store",
+    "postings_store", "stream_postings_store", "stream_clusters_store",
+    "stream_cep_store", "shingle_store", "wal_store", "wal_tail_log",
+    "compacted_store", "dup_windows", "png_media", "jpeg_media",
+    "jpeg_color_media", "wal_live_tail_log", "stream_drift_store",
+    "ckpt_compacted_store", "pca_base", "stream_pack_store",
+    "stream_rollup_store", "posting_pages", "wb_store",
+}
+
+
+def test_one_time_builders_is_the_registry_in_dep_order():
+    """The bench's one-time tier is generated from the registry: the same
+    34 keys as the hand-kept map it replaced, each after its declared
+    deps (so a key's time is its own build, not its inputs')."""
+    from tagtree_spark.queries_ext import one_time_builders
+
+    keys = list(one_time_builders())
+    assert set(keys) == ONE_TIME_KEYS and len(keys) == 34
+    order = list(oc.ARTIFACTS)
+    for name, get in oc.ARTIFACTS.items():
+        for dep in get.deps:
+            if hasattr(dep, "artifact"):
+                assert order.index(dep.artifact) < order.index(name), (name, dep.artifact)
+
+
+@pytest.fixture()
+def registry(cache_env, monkeypatch):
+    """An empty registry and memo, and a count of every cached_dir call
+    the decorator makes through the module global."""
+    monkeypatch.setattr(oc, "ARTIFACTS", {})
+    monkeypatch.setattr(oc, "_MEMO", {})
+    calls = []
+    real = oc.cached_dir
+
+    def counting(*a, **kw):
+        calls.append(a[0])
+        return real(*a, **kw)
+
+    monkeypatch.setattr(oc, "cached_dir", counting)
+    return calls
+
+
+def test_artifact_second_call_is_a_memo_hit(registry, spark):
+    builds = []
+
+    @oc.artifact("t_frame", params={"k": 3})
+    def t_frame(spark, sf_dir, k):
+        builds.append(k)
+        return spark.range(k)
+
+    a = t_frame(spark, "/sf")
+    b = t_frame(spark, "/sf")
+    assert a is b
+    assert builds == [3] and registry == ["t_frame"]  # no build, no cache touch
+    assert a.count() == 3 and oc.ARTIFACTS == {"t_frame": t_frame}
+
+
+def test_artifact_params_key_memo_and_slot(registry, spark):
+    """The same name with other params is a distinct artifact: its own
+    memo entry and its own on-disk slot, built with those params."""
+    built = []
+
+    @oc.artifact("t_dir", kind="dir", params={"k": 1})
+    def t_dir(spark, sf_dir, d, k):
+        built.append(k)
+        with open(os.path.join(d, "k"), "w") as f:
+            f.write(str(k))
+
+    d1 = t_dir(spark, "/sf")
+    d2 = t_dir(spark, "/sf", k=2)
+    assert d1 != d2 and t_dir(spark, "/sf", k=2) == d2
+    assert built == [1, 2]
+    for d, k in ((d1, "1"), (d2, "2")):
+        with open(os.path.join(d, "k")) as f:
+            assert f.read() == k
+    slots = [e for e in os.listdir(oc.cache_root()) if e.startswith("t_dir-")]
+    assert len([e for e in slots if not e.endswith(".complete")]) == 2

@@ -151,6 +151,40 @@ def test_minhash_sigs_precomputed_matches_inline(spark):
     assert x_inline == x_shared and x_inline
 
 
+def test_precomputed_frame_guards_refuse_mismatched_params(spark):
+    """A precomputed sigs=/pairs=/dup= frame is one of the shared
+    artifacts, built at its declared params constant; asking an operator
+    for other parameters next to it must refuse loudly (driver-side, no
+    Spark action) instead of returning plausible wrong rows."""
+    import pytest
+
+    from tagtree_spark.operators.dedup import (
+        MINHASH_SIG_PARAMS,
+        PAIR_COUNT_PARAMS,
+        lsh_band_histogram,
+        span_dup_stats,
+    )
+
+    d = _docs(spark, [(1, "a b c d", "en", "s", 7)])
+    sigs = spark.createDataFrame(
+        [(1, [0] * MINHASH_SIG_PARAMS["n_perm"])], "doc_id bigint, sig array<bigint>"
+    )
+    with pytest.raises(ValueError, match="n_perm"):
+        minhash_near_dup_pairs(d, sigs=sigs, n_perm=MINHASH_SIG_PARAMS["n_perm"] - 4)
+    with pytest.raises(ValueError, match="n_bands"):
+        lsh_band_histogram(d, sigs=sigs, n_bands=MINHASH_SIG_PARAMS["n_bands"] - 1)
+    minhash_near_dup_pairs(d, sigs=sigs)  # the declared params pass
+    pairs = spark.createDataFrame(
+        [(1, 2, 1, 1, 1)], "doc_a bigint, doc_b bigint, n_common bigint, n_a bigint, n_b bigint"
+    )
+    with pytest.raises(ValueError, match="max_df"):
+        ngram_jaccard_pairs(d, pairs=pairs, max_df=PAIR_COUNT_PARAMS["max_df"] + 1)
+    with pytest.raises(ValueError, match="sh=set"):
+        ngram_jaccard_pairs(d, pairs=pairs, sh=pairs)
+    with pytest.raises(ValueError, match="window"):
+        span_dup_stats(d, n=4, dup=pairs)
+
+
 def test_set_overlap_precomputed_pairs_matches_inline(spark):
     """The r13 shared pair-count path (pairs=) must produce identical
     rows as the inline bucket build for BOTH Jaccard and containment —
@@ -1596,62 +1630,6 @@ def test_prefix_filter_is_lossless(documents):
         for r in prefix_filtered_jaccard(documents, min_jaccard_pct=50).collect()
     }
     assert pref == full and len(pref) > 0
-
-
-def test_prefix_filter_pair_gen_matches_jvm_fold(spark):
-    """r14: the vectorized mapInArrow pair generation must emit exactly
-    the candidate set of the old interpreted transform/filter HOF fold
-    (same i<j enumeration over the sorted bucket, same integer length
-    filter) — covers size-1 buckets, all-filtered buckets and mixed
-    sizes."""
-    from pyspark.sql import functions as F
-
-    from tagtree_spark.operators.dedup import _prefix_pair_gen
-
-    rows = [
-        (1, [(10, 20, 1), (11, 22, 2)]),                    # kept pair
-        (2, [(20, 10, 1), (21, 100, 1)]),                   # filtered by length
-        (3, [(30, 10, 1)]),                                  # singleton
-        (4, [(40, 12, 1), (41, 13, 2), (42, 24, 3), (43, 25, 1)]),
-    ]
-    buckets = spark.createDataFrame(
-        rows,
-        "s bigint, ds array<struct<doc_id: bigint, n_sh: bigint, rn: int>>",
-    ).select(F.sort_array("ds").alias("ds"))
-    pct = 50
-    jvm = F.explode(
-        F.flatten(
-            F.expr(
-                "transform(ds, (x, i) -> filter("
-                "transform(slice(ds, i + 2, size(ds)), "
-                "y -> struct(x.doc_id AS doc_a, y.doc_id AS doc_b, "
-                "x.n_sh AS na, y.n_sh AS nb, x.rn AS pa, y.rn AS pb)), "
-                f"p -> {pct} * greatest(p.na, p.nb) <= 100 * least(p.na, p.nb)))"
-            )
-        )
-    )
-    old = sorted(
-        tuple(r)
-        for r in buckets.where(F.size("ds") >= 2)
-        .select(jvm.alias("p"))
-        .select("p.doc_a", "p.doc_b", "p.na", "p.nb", "p.pa", "p.pb")
-        .collect()
-    )
-    new = sorted(
-        tuple(r)
-        for r in buckets.where(F.size("ds") >= 2)
-        .select("ds")
-        .mapInArrow(
-            _prefix_pair_gen(pct),
-            "doc_a bigint, doc_b bigint, na bigint, nb bigint, "
-            "pa bigint, pb bigint",
-        )
-        .collect()
-    )
-    # the equality IS the pin; spot-check the kept and the length-filtered
-    assert old == new and len(new) > 0
-    assert (10, 11, 20, 22, 1, 2) in new        # bucket 1's pair survives
-    assert not any(a == 20 for a, *_ in new)    # bucket 2 length-filtered
 
 
 def test_graph_stats_triangle_vs_chain(spark):
